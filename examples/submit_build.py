@@ -8,8 +8,13 @@ BASELINE.json:6 "jobs ship via spark-submit --py-files"):
     spark-submit --py-files /tmp/fgs.zip \
         --conf spark.sql.adaptive.enabled=true \
         examples/submit_build.py \
-        --corpus s3://bucket/corpus_parquet --checkpoint s3://bucket/ck \
+        --corpus s3://bucket/corpus_parquet --checkpoint /mnt/shared/fgs_ck \
         --capacity 200000000 --window-ticks 86400 --shards 64
+
+The corpus may be any Spark-readable location. The checkpoint must be
+a filesystem path the driver can reach (local disk or a shared mount):
+the driver commits each shard's state and lineage there, and a re-run
+with the same --checkpoint and --shards skips the committed shards.
 
 Local sandbox smoke:
 
@@ -51,7 +56,7 @@ def main() -> int:
         CMSParams, HLLParams, KLLParams, ScalingParams, TDigestParams, TimingParams,
     )
     from fuggetabouspark.pipeline import SketchSpec
-    from fuggetabouspark.state import build_resumable
+    from fuggetabouspark.state import build_resumable, completed_shards
 
     if args.generate_scale:
         write_corpus(spark, args.corpus, args.generate_scale)
@@ -66,6 +71,8 @@ def main() -> int:
         SketchSpec("tdigest", "tdigest", TDigestParams(200.0), "n_tok"),
         SketchSpec("kll", "kll", KLLParams(200), "n_tok"),
     ]
+    done = completed_shards(spark, args.checkpoint, expect_n_shards=args.shards)
+    print(f"resume: {len(done)} of {args.shards} shards already committed")
     sketches = build_resumable(
         spark, df, specs, args.checkpoint,
         n_shards=args.shards, tick_col=tick, partitions=args.partitions,

@@ -42,6 +42,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..io import LINEAGE_SCHEMA, SHARD_SCHEMA, append_rows, read_table
+
 DEDUP_SPEC = "dedup_fp"
 LEDGER_DDL = "fp long, doc_id string, tick long, shard int"
 ANNOTATED_DDL = (
@@ -102,41 +104,22 @@ def _heal_swap(path: str) -> None:
         os.rename(path + "_old", path)
 
 
-def _pa_read_table(path: str, columns=None):
-    """Driver-side parquet read via pyarrow — NO Spark job. The
-    lineage and sketch-state directories are small driver-local
-    artifacts read on EVERY ingest/probe; a full Spark job per read
-    (plan + schedule + collect through py4j) dominated steady-state
-    per-trigger cost (round 6, guide §5: the driver should do almost
-    no data work — and these reads ARE driver work either way, the
-    Spark detour just made them slower). pyarrow.dataset skips
-    '_'-prefixed files (_SUCCESS) exactly as Spark's reader does; the
-    incremental checkpoint layout already assumes a filesystem path
-    (os.path/shutil swap protocol), so a pyarrow-readable location is
-    an existing module-wide invariant, not a new one."""
-    import pyarrow.dataset as ds
-
-    return ds.dataset(path, format="parquet").to_table(columns=columns)
-
-
 def _completed_metas(spark, lineage_path: str) -> list[dict]:
     """Lineage metadata of completed shards at ``lineage_path``, in
     shard order — shared by all three incremental operators
     (code-review r05: the recovery rules must live once)."""
-    if not os.path.exists(lineage_path):
-        return []
-    metas = _pa_read_table(lineage_path, columns=["meta"]).column("meta").to_pylist()
+    metas = read_table(lineage_path, LINEAGE_SCHEMA, columns=["meta"]).column("meta").to_pylist()
     return sorted((json.loads(m) for m in metas), key=lambda m: m["shard"])
 
 
 def _load_sketch_state(spark, state_path: str, done: list[int], spec: str,
                        with_raw: bool = False):
-    """Merged membership sketch over the completed shards' rows (plus
-    the always-valid shard=-1 compacted row), with the _old fallback
-    for a compaction that crashed mid-swap — the single implementation
-    behind all three operators' state loaders. Merge-all within the
-    completed set: union-only monoids are one-sided safe under
-    crash-retried shard ids (see load_dedup_state's docstring).
+    """Merged membership sketch over the completed shards' rows of
+    group '' (every incremental writer's group) plus the always-valid
+    shard=-1 compacted row, with read_table's _old fallback — the
+    single implementation behind the operators' loaders. Merge-all
+    within the completed set: union-only monoids are one-sided safe
+    under crash-retried shard ids (see load_dedup_state's docstring).
 
     ``with_raw=True`` returns ``(sketch, raw_payload_or_None)``: when
     exactly ONE row contributed, the merged sketch IS that row's
@@ -145,18 +128,13 @@ def _load_sketch_state(spark, state_path: str, done: list[int], spec: str,
     (round 6; post-compaction steady state is exactly one row)."""
     from ..sketches import sketch_from_bytes
 
-    if not os.path.exists(state_path) and os.path.exists(state_path + "_old"):
-        state_path = state_path + "_old"
-    if not done or not os.path.exists(state_path):
+    if not done:
         return (None, None) if with_raw else None
-    tbl = _pa_read_table(state_path, columns=["spec", "payload", "shard"])
     ok = set(done) | {-1}
     payloads = [
-        p.as_py()
-        for s, p, sh in zip(
-            tbl.column("spec"), tbl.column("payload"), tbl.column("shard")
-        )
-        if s.as_py() == spec and sh.as_py() in ok
+        r["payload"]
+        for r in read_table(state_path, SHARD_SCHEMA, ["spec", "group", "payload", "shard"]).to_pylist()
+        if r["spec"] == spec and r["group"] == "" and r["shard"] in ok
     ]
     if not payloads:
         return (None, None) if with_raw else None
@@ -238,10 +216,7 @@ def _compact_sketch_state(spark, state_path: str, sk, spec: str):
     if sk is None:
         return None
     _swap_dir(
-        lambda tmp: spark.createDataFrame(
-            [(spec, "", bytearray(sk.to_bytes()), int(sk.n_items), -1)],
-            "spec string, group string, payload binary, n_items long, shard int",
-        ).coalesce(1).write.mode("overwrite").parquet(tmp),
+        lambda tmp: append_rows(tmp, [(spec, "", sk.to_bytes(), int(sk.n_items), -1)], SHARD_SCHEMA),
         state_path,
     )
     return sk
@@ -563,9 +538,7 @@ def incremental_dedup(
             "n_retained": n_new - n_h - n_i,
             **(meta_extra or {}),
         }
-        spark.createDataFrame(
-            [(shard, json.dumps(meta, sort_keys=True))], "shard int, meta string"
-        ).write.mode("append").parquet(lineage_path)
+        append_rows(lineage_path, [(shard, json.dumps(meta, sort_keys=True))], LINEAGE_SCHEMA)
     return ann
 
 
@@ -1227,9 +1200,7 @@ def incremental_near_dup(
             "n_retained": n - h - i,
             **(meta_extra or {}),
         }
-        spark.createDataFrame(
-            [(shard, json.dumps(meta, sort_keys=True))], "shard int, meta string"
-        ).write.mode("append").parquet(lineage_path)
+        append_rows(lineage_path, [(shard, json.dumps(meta, sort_keys=True))], LINEAGE_SCHEMA)
     return ann
 
 
@@ -1545,9 +1516,7 @@ def incremental_passages(
             "n_hist_windows": int(counts["h"] or 0),
             **(meta_extra or {}),
         }
-        spark.createDataFrame(
-            [(shard, json.dumps(meta, sort_keys=True))], "shard int, meta string"
-        ).write.mode("append").parquet(lineage_path)
+        append_rows(lineage_path, [(shard, json.dumps(meta, sort_keys=True))], LINEAGE_SCHEMA)
     return ann
 
 
@@ -2215,9 +2184,7 @@ def _commit_emb_rows(
         pre_lineage()
     kind_ = meta_fields.pop("kind_", "emb_dup")
     meta = {"shard": shard, "now": int(now), "kind": kind_, **meta_fields}
-    spark.createDataFrame(
-        [(shard, json.dumps(meta, sort_keys=True))], "shard int, meta string"
-    ).write.mode("append").parquet(lineage_path)
+    append_rows(lineage_path, [(shard, json.dumps(meta, sort_keys=True))], LINEAGE_SCHEMA)
 
 
 def commit_emb_state(

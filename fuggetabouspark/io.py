@@ -11,9 +11,18 @@ mismatches fail loudly with the offending field named.
 
 from __future__ import annotations
 
+import os
+import uuid
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+# checkpoint sketch rows and lineage rows, typed as Spark writes them
+SHARD_SCHEMA = pa.schema([("spec", pa.string()), ("group", pa.string()), ("payload", pa.binary()),
+                          ("n_items", pa.int64()), ("shard", pa.int32())])
+LINEAGE_SCHEMA = pa.schema([("shard", pa.int32()), ("meta", pa.string())])
 
 CORPUS_SCHEMA = T.StructType(
     [
@@ -87,3 +96,37 @@ def write_sketch_state(state_df: DataFrame, path: str, mode: str = "append") -> 
 
 def read_sketch_state(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
+
+
+def read_table(path: str, schema: pa.Schema, columns=None) -> pa.Table:
+    """Read a checkpoint parquet directory on the driver with pyarrow,
+    with no Spark job: these tables are small and read on every build,
+    load and ingest. A missing ``path`` falls back to ``path_old`` (a
+    directory swap that crashed between its renames), then reads as
+    empty. Like Spark, skips files named '.*' (in-flight temporaries,
+    .crc) and '_*' (_SUCCESS). The explicit schema reads Spark-written
+    and append_rows files alike."""
+    import pyarrow.dataset as ds
+
+    if not os.path.exists(path) and os.path.exists(path + "_old"):
+        path = path + "_old"
+    if not os.path.exists(path):
+        return schema.empty_table().select(columns or schema.names)
+    return ds.dataset(path, schema=schema, format="parquet").to_table(columns=columns)
+
+
+def append_rows(path: str, rows: list[tuple], schema: pa.Schema) -> None:
+    """Append ``rows`` (tuples in ``schema`` order) to the parquet
+    directory ``path`` as one file, written by the driver under a '.'
+    name that readers skip and then renamed into place: a crash
+    mid-write leaves no partial file visible. Checkpoints therefore
+    live on a path the driver can reach."""
+    import pyarrow.parquet as pq
+
+    cols = list(zip(*rows)) or [()] * len(schema)
+    table = pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema)
+    os.makedirs(path, exist_ok=True)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(path, "." + name)
+    pq.write_table(table, tmp)
+    os.replace(tmp, os.path.join(path, name))

@@ -3,15 +3,20 @@
 checkpointed sketch state for resumable runs").
 
 Granularity: the input is split into ``n_shards`` deterministic shards
-by ``pmod(xxhash64(doc_id), n_shards)``. Each shard is built and its
-final per-shard sketch rows + lineage row are appended to the
-checkpoint directory; a lineage row is only visible after its shard's
-sketch rows were durably written (written in the same job, lineage
-last). Resume lists completed shard ids from lineage and anti-joins
-them away — a killed run re-does at most one shard. The final answer
-merges every shard's sketch rows; correctness under retries holds
-because shard partials are deduplicated by (spec, group, shard) before
-the merge, so a half-written retry can never double-count.
+by ``pmod(xxhash64(doc_id), n_shards)``. Each shard is ONE Spark action,
+``build_sketches(...).collect()``; the driver then appends the shard's
+sketch rows to ``sketch_state/`` and, last, its lineage row to
+``lineage/``, each as one parquet file (io.append_rows). Resume skips
+the shard ids found in lineage, so a killed run re-does at most one
+shard. A crash between the two appends leaves a second copy of that
+shard's sketch rows after the re-run, so load_state keeps one row per
+(spec, group, shard) — the largest n_items — before merging: additive
+sketches must never count a retried shard twice.
+
+The collected rows are O(specs × groups), the rows load_state brings
+to the driver anyway. Invariant: the checkpoint is a filesystem path
+the driver can reach (local or mounted), since commits, loads and
+compact_checkpoint's directory swap all run on the driver.
 
 At cluster scale, shards double as a unit of incremental ingest: a new
 partition of an Iceberg table is just one more shard appended to the
@@ -22,8 +27,11 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
-from .pipeline import LINEAGE_SPEC, SketchSpec, build_sketches, merge_rows_to_sketches
+from .io import LINEAGE_SCHEMA, SHARD_SCHEMA, append_rows, read_table
+from .pipeline import (GROUP_SEP, LINEAGE_SPEC, SketchSpec, build_sketches, corpus_digest,
+                       lineage_from_rows, merge_rows_to_sketches)
 
 SHARD_DDL = "spec string, group string, payload binary, n_items long, shard int"
 
@@ -39,18 +47,15 @@ def completed_shards(spark, checkpoint_dir: str, expect_n_shards: int | None = N
     would re-process documents already covered by completed shards and
     double-count every additive sketch."""
     _, lineage_path = _paths(checkpoint_dir)
-    try:
-        rows = spark.read.parquet(lineage_path).select("shard", "meta").collect()
-    except Exception:
-        return set()
-    if expect_n_shards is not None and rows:
-        recorded = json.loads(rows[0]["meta"]).get("n_shards")
+    tbl = read_table(lineage_path, LINEAGE_SCHEMA)
+    if expect_n_shards is not None and tbl.num_rows:
+        recorded = json.loads(tbl.column("meta")[0].as_py()).get("n_shards")
         if recorded != expect_n_shards:
             raise ValueError(
                 f"checkpoint was built with n_shards={recorded}; resuming with "
                 f"n_shards={expect_n_shards} would double-count — use the original value"
             )
-    return {r["shard"] for r in rows}
+    return set(tbl.column("shard").to_pylist())
 
 
 def build_resumable(
@@ -71,7 +76,7 @@ def build_resumable(
 
     ``fail_after_shard`` deliberately raises after N shards (test hook
     for the kill-and-resume gate in BASELINE.md).
-    Returns the merged final sketch rows as a list of pyspark Rows.
+    Returns load_state's {(spec, group): merged sketch}.
     """
     from pyspark.sql import functions as F
 
@@ -84,45 +89,36 @@ def build_resumable(
         if shard in done:
             continue
         sub = df.where(shard_col == shard)
-        final = build_sketches(
+        rows = build_sketches(
             sub, specs, group_cols=group_cols, tick_col=tick_col,
             partitions=partitions, salt_mod=salt_mod,
             # an STBF tier's union spans every shard's partials, so a
             # caller-requested split is multiplied by the shard count;
             # fanin<=1 means "no split" and must stay that way
             stbf_fanin=(stbf_fanin * n_shards) if stbf_fanin and stbf_fanin > 1 else None,
-        ).withColumn("shard", F.lit(shard)).persist()
-        try:
-            # sketch rows first, lineage row last: a shard is only
-            # "completed" once its state is durable
-            sketch_rows = final.where(F.col("spec") != LINEAGE_SPEC)
-            sketch_rows.write.mode("append").parquet(state_path)
-            # shard-level audit lineage (SURVEY §3.3, round 3): exact
-            # per-shard row/token totals + ingest digest from the cached
-            # build's per-partition lineage rows (no recompute), plus
-            # the file-level provenance of the scan. Hash shards read
-            # every input file (membership is pmod(hash, n_shards)), so
-            # input_files is the full file set per shard — plan
-            # metadata, not an extra data pass; empty for
-            # non-file-backed frames.
-            from .pipeline import corpus_digest, lineage_from_rows
-
-            lin_rows = final.where(F.col("spec") == LINEAGE_SPEC).collect()
-        finally:
-            final.unpersist()
-        lin = lineage_from_rows(lin_rows)
+        ).collect()
+        # sketch rows first, lineage row last: a shard is only
+        # "completed" once its state is durable
+        append_rows(state_path, [(*r, shard) for r in rows if r["spec"] != LINEAGE_SPEC],
+                    SHARD_SCHEMA)
+        # shard-level audit lineage (SURVEY §3.3): exact per-shard
+        # row/token totals + ingest digest from the build's
+        # per-partition lineage rows, plus the file-level provenance of
+        # the scan. Hash shards read every input file (membership is
+        # pmod(hash, n_shards)), so input_files is the full file set
+        # per shard — plan metadata, not an extra data pass; empty for
+        # non-file-backed frames.
+        lin = lineage_from_rows(rows)
         meta = {
             "shard": shard,
             "n_shards": n_shards,
             "specs": [s.name for s in specs],
             "n_rows": sum(e["n_rows"] for e in lin),
             "n_tokens": sum(e["n_tokens"] for e in lin),
-            "token_digest": corpus_digest(lin_rows),
+            "token_digest": corpus_digest(rows),
             "input_files": sorted(sub.inputFiles()),
         }
-        spark.createDataFrame(
-            [(shard, json.dumps(meta, sort_keys=True))], "shard int, meta string"
-        ).write.mode("append").parquet(lineage_path)
+        append_rows(lineage_path, [(shard, json.dumps(meta, sort_keys=True))], LINEAGE_SCHEMA)
         built += 1
         if fail_after_shard is not None and built >= fail_after_shard:
             raise RuntimeError(f"injected failure after shard {shard}")
@@ -147,11 +143,7 @@ def compact_checkpoint(spark, checkpoint_dir: str, now: int, drop_groups_before:
     driver-local filesystem renames — on an object store deployment
     replace with a manifest swap (Iceberg snapshot commit).
     """
-    import shutil
-
-    from .pipeline import GROUP_SEP
-
-    state_path, lineage_path = _paths(checkpoint_dir)
+    state_path, _ = _paths(checkpoint_dir)
     sketches = load_state(spark, checkpoint_dir)
     rows = []
     for (spec, group), sk in sorted(sketches.items()):
@@ -163,10 +155,11 @@ def compact_checkpoint(spark, checkpoint_dir: str, now: int, drop_groups_before:
                 pass
         if hasattr(sk, "decay"):
             sk.decay(now)
-        rows.append((spec, group, bytearray(sk.to_bytes()), sk.n_items, -1))
+        rows.append((spec, group, sk.to_bytes(), sk.n_items, -1))
     tmp = state_path + "_compacting"
     old = state_path + "_old"
-    spark.createDataFrame(rows, SHARD_DDL).coalesce(4).write.mode("overwrite").parquet(tmp)
+    shutil.rmtree(tmp, ignore_errors=True)  # leftover of a crashed compaction
+    append_rows(tmp, rows, SHARD_SCHEMA)
     # re-entrant swap: only retire the _old fallback once a live
     # state_path exists. If a previous compaction crashed between the
     # two renames (state missing, _old = the only live copy — which
@@ -181,18 +174,15 @@ def compact_checkpoint(spark, checkpoint_dir: str, now: int, drop_groups_before:
 
 
 def load_state(spark, checkpoint_dir: str):
-    """Read checkpointed shard rows, dedupe retries, return
-    {(spec, group): merged sketch}."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    import os
-
+    """Read checkpointed shard rows (no Spark job), dedupe retries,
+    return {(spec, group): merged sketch}. A missing checkpoint loads
+    as {}."""
     state_path, _ = _paths(checkpoint_dir)
-    if not os.path.exists(state_path) and os.path.exists(state_path + "_old"):
-        state_path = state_path + "_old"  # compaction crashed mid-swap
-    df = spark.read.parquet(state_path)
     # dedupe half-written retries: keep one row per (spec, group, shard)
-    w = Window.partitionBy("spec", "group", "shard").orderBy(F.col("n_items").desc())
-    df = df.withColumn("_rn", F.row_number().over(w)).where("_rn = 1").drop("_rn")
-    return merge_rows_to_sketches(df.collect())
+    best = {}
+    for r in read_table(state_path, SHARD_SCHEMA).to_pylist():
+        key = (r["spec"], r["group"], r["shard"])
+        if key not in best or r["n_items"] > best[key]["n_items"]:
+            best[key] = r
+    # merge in key order, so the result does not depend on file order
+    return merge_rows_to_sketches(best[k] for k in sorted(best))

@@ -266,6 +266,30 @@ class TestCompaction:
         compact_dedup_checkpoint(spark, ck)
         assert load_dedup_state(spark, ck) is not None
 
+    def test_state_load_merges_only_ungrouped_rows(self, spark, ck):
+        """Every incremental writer uses group ''; a row of the same
+        spec under another group is a different sketch and must not be
+        merged into the membership state."""
+        import os
+
+        import numpy as np
+
+        from fuggetabouspark.dataops.incremental import DEDUP_SPEC, load_dedup_state
+        from fuggetabouspark.sketches import sketch_from_bytes
+
+        incremental_dedup(
+            spark, spark.createDataFrame([(1, "t one")], "doc_id long, text string"), ck, now=1
+        ).unpersist()
+        before = load_dedup_state(spark, ck)
+        other = sketch_from_bytes(before.to_bytes())
+        other.add_batch(np.arange(1, 5_001, dtype=np.int64), 1)
+        assert other.to_bytes() != before.to_bytes()
+        spark.createDataFrame(
+            [(DEDUP_SPEC, "other", bytearray(other.to_bytes()), int(other.n_items), 0)],
+            "spec string, group string, payload binary, n_items long, shard int",
+        ).write.mode("append").parquet(os.path.join(ck, "sketch_state"))
+        assert load_dedup_state(spark, ck).to_bytes() == before.to_bytes()
+
     def test_guard_auto_compacts(self, spark, ck):
         import os
 

@@ -482,6 +482,159 @@ class TestResume:
         assert dig1 == dig2 != 0
 
 
+RESUME_SPECS = [
+    SketchSpec("tbf", "tbf", TimingParams(40_000, 0.005, window_ticks=WINDOW), "tokens"),
+    SketchSpec("hll", "hll", HLLParams(p=12), "tokens"),
+]
+
+
+def _resume(spark, ck, **kw):
+    df = spark_corpus(spark, "xs", partitions=6)
+    return build_resumable(spark, df, RESUME_SPECS, ck, n_shards=4, tick_col=_tick_col(),
+                           partitions=4, **kw)
+
+
+def _assert_same_state(got, want):
+    assert set(got) == set(want)
+    for key in want:
+        assert got[key].to_bytes() == want[key].to_bytes(), f"{key}: state diverged"
+
+
+@pytest.fixture(scope="module")
+def full_build(spark, tmp_path_factory):
+    """An uninterrupted 4-shard build: (checkpoint dir, loaded state)."""
+    ck = str(tmp_path_factory.mktemp("resume") / "ck_full")
+    return ck, _resume(spark, ck)
+
+
+class TestCheckpointCommit:
+    """The driver-side commit: each shard's sketch rows, then its
+    lineage row, appended as whole parquet files."""
+
+    def test_leftover_temp_files_ignored(self, spark, tmp_path, full_build):
+        """A crash mid-write leaves a '.'-prefixed temporary file; the
+        loaders skip it and the resumed build is unchanged."""
+        ck = tmp_path / "ck"
+        with pytest.raises(RuntimeError, match="injected failure"):
+            _resume(spark, str(ck), fail_after_shard=2)
+        for sub in ("sketch_state", "lineage"):
+            (ck / sub / ".part-torn.parquet").write_bytes(b"PAR1 torn write")
+        _assert_same_state(_resume(spark, str(ck)), full_build[1])
+
+    def test_crash_between_sketch_and_lineage_append(self, spark, tmp_path, full_build,
+                                                     monkeypatch):
+        """A shard whose sketch file landed but whose lineage file did
+        not is re-run, leaving two copies of its rows; the retry
+        dedupe keeps the state equal to the uninterrupted build."""
+        import pyarrow.dataset as ds
+
+        import fuggetabouspark.state as state_mod
+        from fuggetabouspark.state import completed_shards
+
+        ck = str(tmp_path / "ck")
+        append = state_mod.append_rows
+
+        def crash_before_lineage_of_shard_1(path, rows, schema):
+            if path.endswith("lineage") and rows[0][0] == 1:
+                raise RuntimeError("crash before lineage")
+            append(path, rows, schema)
+
+        monkeypatch.setattr(state_mod, "append_rows", crash_before_lineage_of_shard_1)
+        with pytest.raises(RuntimeError, match="crash before lineage"):
+            _resume(spark, ck)
+        monkeypatch.undo()
+        assert completed_shards(spark, ck) == {0}
+        resumed = _resume(spark, ck)
+        shards = ds.dataset(f"{ck}/sketch_state").to_table().column("shard").to_pylist()
+        assert shards.count(1) == 2 * shards.count(0) > 0
+        _assert_same_state(resumed, full_build[1])
+
+    def test_spark_written_checkpoint_loads(self, spark, tmp_path, full_build):
+        """A checkpoint the Spark writer appended shard by shard
+        (_SUCCESS, .crc files) loads byte-identically."""
+        import os
+
+        from fuggetabouspark.state import SHARD_DDL, completed_shards
+
+        full_ck, full = full_build
+        old = str(tmp_path / "ck_old")
+        for sub, ddl in (("sketch_state", SHARD_DDL), ("lineage", "shard int, meta string")):
+            rows = spark.read.parquet(f"{full_ck}/{sub}").collect()
+            for shard in range(4):
+                spark.createDataFrame([r for r in rows if r["shard"] == shard], ddl) \
+                    .write.mode("append").parquet(f"{old}/{sub}")
+        names = os.listdir(f"{old}/sketch_state")
+        assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+        assert completed_shards(spark, old, expect_n_shards=4) == {0, 1, 2, 3}
+        _assert_same_state(load_state(spark, old), full)
+
+    def test_compaction_replaces_leftover_compacting_dir(self, spark, tmp_path, full_build):
+        """A compaction that crashed before its swap left
+        sketch_state_compacting behind; the next one replaces it, so
+        the compacted state holds one row per (spec, group)."""
+        import shutil
+
+        import pyarrow.dataset as ds
+
+        from fuggetabouspark.state import compact_checkpoint
+
+        ck = tmp_path / "ck"
+        shutil.copytree(full_build[0], ck)
+        shutil.copytree(ck / "sketch_state", ck / "sketch_state_compacting")
+        compact_checkpoint(spark, str(ck), now=1)
+        shards = ds.dataset(str(ck / "sketch_state")).to_table().column("shard").to_pylist()
+        assert shards == [-1] * len(full_build[1])
+
+    def test_spark_reads_new_files_with_ddl_schema(self, spark, full_build):
+        from fuggetabouspark.state import SHARD_DDL
+
+        for sub, ddl in (("sketch_state", SHARD_DDL), ("lineage", "shard int, meta string")):
+            got = spark.read.parquet(f"{full_build[0]}/{sub}").schema.simpleString()
+            assert got == spark.createDataFrame([], ddl).schema.simpleString()
+
+    def test_resume_with_other_shard_count_raises(self, spark, full_build):
+        df = spark_corpus(spark, "xs", partitions=6)
+        with pytest.raises(ValueError, match="n_shards=4"):
+            build_resumable(spark, df, RESUME_SPECS, full_build[0], n_shards=3,
+                            tick_col=_tick_col(), partitions=4)
+
+    def test_missing_checkpoint_reads_empty(self, spark, tmp_path):
+        from fuggetabouspark.state import completed_shards
+
+        assert completed_shards(spark, str(tmp_path / "none"), expect_n_shards=4) == set()
+        assert load_state(spark, str(tmp_path / "none")) == {}
+
+    def test_spark_job_counts(self, spark, tmp_path):
+        """A 1-shard build runs no more Spark jobs than the build's own
+        collect, and the state readers run none."""
+        import uuid
+
+        from fuggetabouspark.state import completed_shards
+
+        sc = spark.sparkContext
+        df = spark_corpus(spark, "xs", partitions=4)
+        specs = [SketchSpec("hll", "hll", HLLParams(p=10), "tokens")]
+        ck = str(tmp_path / "ck")
+
+        def jobs(fn):
+            group = f"fgs-jobs-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        collect_only = jobs(lambda: build_sketches(
+            df, specs, tick_col=_tick_col(), partitions=4).collect())
+        resumable = jobs(lambda: build_resumable(
+            spark, df, specs, ck, n_shards=1, tick_col=_tick_col(), partitions=4))
+        assert 0 < resumable <= collect_only
+        assert jobs(lambda: load_state(spark, ck)) == 0
+        assert jobs(lambda: completed_shards(spark, ck, expect_n_shards=1)) == 0
+
+
 def test_quantile_spec_over_tokens_rejected():
     """tdigest/kll over value='tokens' must fail at construction: the
     token hot path deduplicates batches, which would silently drop the
