@@ -119,7 +119,7 @@ def run_emb():
     keyed = inc._emb_table_keys(
         src, dim=EDIM, bits=16, tables=8, vec_col="embedding", id_col="vec_id"
     ).localCheckpoint(eager=True)
-    sk = timed("emb state load (driver)", lambda: inc._load_emb_state(spark, eck), spark)
+    sk = timed("emb state load (driver)", lambda: inc._EMB.load(eck), spark)
     w = sk_window(sk)
     payload = timed("emb sk.to_bytes (driver)", lambda: sk.to_bytes(), None, reps=2)
     state_df = spark.createDataFrame(
@@ -174,18 +174,15 @@ def run_emb():
     nh = timed("emb probe hits count", lambda: mk_hits().count(), spark)
     print(f"    hits = {nh}")
     hits = mk_hits().localCheckpoint(eager=True)
-    done = inc._done_shards(inc._emb_completed(spark, eck), None)
-    bucket_led = inc._read_swap(spark, inc._emb_paths(eck)[1], inc.EMB_BUCKET_LEDGER_DDL)
-    vec_led = inc._read_swap(spark, inc._emb_paths(eck)[2], inc.EMB_VEC_LEDGER_DDL)
+    done = inc._EMB.done(eck)
+    bucket_led = inc._EMB.ledger(spark, eck, "bucket_ledger", done)
+    vec_led = inc._EMB.ledger(spark, eck, "vec_ledger", done)
     probe = keyed.select("bkey", "vec_id").join(F.broadcast(hits), "bkey")
     timed("emb probe join noop", lambda: noop(probe), spark)
 
     def mk_cand():
         return (
-            bucket_led.where(
-                (F.col("shard").isin(done))
-                & (F.col("tick") >= F.lit(2 - w + 1)) & (F.col("tick") <= F.lit(2))
-            )
+            bucket_led.where(F.col("tick").between(2 - w + 1, 2))
             .select("bkey", F.col("vec_id").alias("hist_vec_id"))
             .join(F.broadcast(probe), "bkey")
             .select("vec_id", "hist_vec_id")
@@ -197,8 +194,7 @@ def run_emb():
     cand = mk_cand().localCheckpoint(eager=True)
     hist_ids = cand.select(F.col("hist_vec_id").alias("vec_id")).distinct()
     hvecs = (
-        vec_led.where(F.col("shard").isin(done))
-        .join(F.broadcast(hist_ids), "vec_id", "left_semi")
+        vec_led.join(F.broadcast(hist_ids), "vec_id", "left_semi")
         .select(F.col("vec_id").alias("hist_vec_id"), F.col("embedding").alias("hvec"))
     )
     timed("emb hvecs noop", lambda: noop(hvecs), spark)
@@ -255,14 +251,10 @@ def run_recrawl():
     probe()  # warm
     timed("recrawl full (bench replica)", probe, spark)
     sk = timed(
-        "recrawl state load (driver)", lambda: inc.load_dedup_state(spark, ckdir), spark
+        "recrawl state load (driver)", lambda: inc._EXACT.load(ckdir), spark
     )
     timed("recrawl sk.to_bytes (driver)", lambda: sk.to_bytes(), None)
-    fps = day2.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.xxhash64(F.col("tokens")).alias("fp"),
-        F.lit(2).cast("long").alias("tick"),
-    )
+    fps = inc._shard_fps(day2, "tokens", None, 2)
     timed("recrawl fps noop", lambda: noop(fps), spark)
     timed(
         "recrawl annotate only (no count)",

@@ -1,6 +1,6 @@
 """Incremental cross-shard dedup — the composition of the library's two
 halves (sketch membership x dedup family; SURVEY.md §2.4 seen_within +
-§3.3 incremental shards, VERDICT r03 "Next round" #1).
+§3.3 incremental shards).
 
 The 100 TB workflow this serves: dedup a NEW ingest shard against the
 whole corpus history WITHOUT re-joining history. History is carried by
@@ -12,7 +12,7 @@ two compact artifacts, both tiny relative to the corpus text:
   ~30 bytes per RETAINED historical doc.
 
 A new shard's docs probe the broadcast sketch executor-side
-(``queries.seen_within_distributed``): zero false negatives in-window
+(``queries.seen_within_payloads``): zero false negatives in-window
 means a miss is PROOF the doc is new, so only the hit fraction
 (true dup rate + configured FPR) ever proceeds to exact verification —
 a broadcast join of the (tiny) candidate fp set against the ledger.
@@ -25,24 +25,75 @@ doc only suppresses a new clone while its fingerprint's latest
 RETAINED sighting is within ``window`` ticks, i.e. tick in
 [now - window + 1, now] — matching TimingBloomFilter.contains_batch
 exactly. Once history decays, the next clone survives and re-enters
-both the sketch and the ledger with its own tick.
+both the sketch and the ledger with its own tick. A query ``window``
+may only narrow the sketch's ``window_ticks``, never widen it: older
+sightings may already be decayed.
 
 Scale shape per ingest: one shard-local shuffle (groupBy fp for the
 intra-shard first-occurrence), one broadcast probe map, one
 broadcast-semi-join against the ledger restricted to candidate fps,
 zero joins against corpus text. State grows O(retained docs) in the
 ledger and O(1) in the sketch.
+
+Checkpoint layout. The four operators share the machinery above, each
+under its own subdirectory of ``checkpoint_dir`` holding its own
+``sketch_state``, ledgers and ``lineage``, so no operator's
+compaction, shard numbering or recovery can touch another's:
+
+    operator                     subdirectory  ledgers, in commit order
+    incremental_dedup            (root)        fp_ledger
+    incremental_near_dup         near/         band_ledger, sig_ledger
+    incremental_passages         passages/     fp_ledger
+    incremental_embedding_dedup  emb/          bucket_ledger, vec_ledger
+
+The sketch indexes the first ledger's first column (its key); the
+ledger's second column names the doc the key came from.
+
+Commit order of one shard: heal every appended directory (below), then
+the sketch rows, then the ledgers in the order above, then the
+caller's ``pre_lineage_hook`` (caller-durable output such as the
+streaming guard's clean stream), then the lineage row LAST. A shard is
+complete once its lineage row is durable, and anything a caller writes
+after it would be lost to a crash in between (a completed shard is
+never re-run).
+
+Recovery rules:
+
+- lineage gating: sketch loads and ledger reads see only shards with a
+  lineage row, so a crash before it leaves invisible orphan rows, and
+  the retry reuses the orphan's shard id;
+- merge-all: within the completed shards EVERY sketch row is merged,
+  plus the always-valid shard=-1 row compaction writes. Not one row
+  per shard, as state.load_state keeps for additive sketches: picking
+  one row could keep an orphan and drop its retry's keys, a duplicate
+  missed forever. The membership sketch is a union-only monoid, so an
+  orphan's extra keys only add candidate hits the ledger verify
+  rejects (n_items, advisory here, may double-count);
+- ``exclude_epoch``: drops shards whose lineage meta carries that
+  stream epoch, so the replay of a guard epoch that crashed after one
+  operator committed does not treat that operator's own half-epoch
+  output as history (every doc would be flagged a duplicate of itself).
+  Compaction only runs after an epoch fully commits, so the shard=-1
+  row never holds a same-epoch shard;
+- heal-before-append: compaction and ledger expiry replace directories
+  with io.swap_dir. A crash between its renames leaves only
+  ``<dir>_old``, which readers fall back to and every commit restores
+  (io.heal_swap) before appending: an append would otherwise create a
+  new directory holding only the new rows and shadow the history.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import LINEAGE_SCHEMA, SHARD_SCHEMA, append_rows, read_table
+from ..io import (LINEAGE_SCHEMA, SHARD_SCHEMA, append_rows, heal_swap, live_dir, read_table,
+                  swap_dir)
+from ..params import ScalingParams, TimingParams
 
 DEDUP_SPEC = "dedup_fp"
 LEDGER_DDL = "fp long, doc_id string, tick long, shard int"
@@ -50,264 +101,239 @@ ANNOTATED_DDL = (
     "doc_id string, fp long, tick long, "
     "is_dup_history boolean, is_dup_intra boolean, hist_doc_id string"
 )
+_DEFAULT_PARAMS = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
 
 
-def _paths(checkpoint_dir: str) -> tuple[str, str, str]:
-    return (
-        os.path.join(checkpoint_dir, "sketch_state"),
-        os.path.join(checkpoint_dir, "fp_ledger"),
-        os.path.join(checkpoint_dir, "lineage"),
-    )
+def _ddl_cols(ddl: str) -> list[list[str]]:
+    return [c.split(" ", 1) for c in ddl.split(", ")]
 
 
-def _read_swap(spark, path: str, ddl: str) -> DataFrame | None:
-    """Read a checkpoint parquet dir that may be mid-swap: expiry and
-    compaction replace directories via tmp → rename(path, path_old) →
-    rename(tmp, path), so a crash between the renames leaves only
-    ``path_old`` — fall back to it. The explicit schema makes an
-    EMPTY rewritten ledger (zero part files) readable."""
-    if not os.path.exists(path) and os.path.exists(path + "_old"):
-        path = path + "_old"
-    if not os.path.exists(path):
-        return None
-    return spark.read.schema(ddl).parquet(path)
+@dataclass(frozen=True)
+class _Checkpoint:
+    """One operator's checkpoint: its subdirectory, sketch spec name
+    and ledgers ({name: DDL} in commit order). The module docstring
+    states the layout, commit order and recovery rules it implements."""
+
+    subdir: str
+    spec: str
+    ledgers: dict
+
+    def path(self, checkpoint_dir: str, name: str) -> str:
+        return os.path.join(checkpoint_dir, self.subdir, name)
+
+    def _key_doc(self) -> list[str]:
+        return [c for c, _ in _ddl_cols(next(iter(self.ledgers.values())))[:2]]
+
+    def completed(self, checkpoint_dir: str) -> list[dict]:
+        """Lineage metadata of the completed shards, in shard order."""
+        metas = read_table(self.path(checkpoint_dir, "lineage"), LINEAGE_SCHEMA, ["meta"])
+        return sorted((json.loads(m) for m in metas.column("meta").to_pylist()),
+                      key=lambda m: m["shard"])
+
+    def done(self, checkpoint_dir: str, exclude_epoch=None) -> list[int]:
+        return [
+            int(m["shard"])
+            for m in self.completed(checkpoint_dir)
+            if exclude_epoch is None or m.get("epoch") != int(exclude_epoch)
+        ]
+
+    def load(self, checkpoint_dir: str, exclude_epoch=None, with_raw: bool = False):
+        """Merged membership sketch of the completed shards, None if
+        none. ``with_raw=True`` returns ``(sketch, payload)``: when
+        exactly one row contributed (the steady state after compaction)
+        ``payload`` is its stored bytes, which the probe broadcasts
+        as-is instead of re-serializing the sketch; else None."""
+        from ..sketches import sketch_from_bytes
+
+        done = self.done(checkpoint_dir, exclude_epoch)
+        ok = {*done, -1} if done else set()
+        payloads = [
+            r["payload"]
+            for r in read_table(self.path(checkpoint_dir, "sketch_state"), SHARD_SCHEMA,
+                                ["spec", "group", "payload", "shard"]).to_pylist()
+            if r["spec"] == self.spec and r["group"] == "" and r["shard"] in ok
+        ]
+        sk = None
+        for p in payloads:
+            sk = sketch_from_bytes(p) if sk is None else sk.merge(sketch_from_bytes(p))
+        if with_raw:
+            return sk, (payloads[0] if len(payloads) == 1 else None)
+        return sk
+
+    def ledger(self, spark, checkpoint_dir: str, name: str, done=None) -> DataFrame | None:
+        """Ledger ``name``, None if never written; ``done`` restricts it
+        to those shards. The explicit schema also reads a ledger that
+        expiry rewrote empty (no part files)."""
+        path = live_dir(self.path(checkpoint_dir, name))
+        if not os.path.exists(path):
+            return None
+        df = spark.read.schema(self.ledgers[name]).parquet(path)
+        return df if done is None else df.where(F.col("shard").isin(done))
+
+    def compact(self, checkpoint_dir: str):
+        """Fold the completed shards' sketch rows into one shard=-1 row
+        (io.swap_dir); returns the merged sketch, None if empty."""
+        sk = self.load(checkpoint_dir)
+        if sk is not None:
+            row = (self.spec, "", sk.to_bytes(), int(sk.n_items), -1)
+            swap_dir(lambda tmp: append_rows(tmp, [row], SHARD_SCHEMA),
+                     self.path(checkpoint_dir, "sketch_state"))
+        return sk
+
+    def probe(self, spark, checkpoint_dir: str, keys: DataFrame, now: int, window, exclude_epoch):
+        """Probe the broadcast sketch with the key column of ``keys``.
+        None when no shard has completed; else ``(hits, live, ledgers)``:
+        the distinct keys seen within the window, the window's ``tick``
+        predicate, and every ledger restricted to the completed shards."""
+        from ..queries import _with_window, seen_within_payloads, sk_window
+
+        sk, raw = self.load(checkpoint_dir, exclude_epoch, with_raw=True)
+        if sk is None:
+            return None
+        w = window if window is not None else sk_window(sk)
+        if w > sk_window(sk):
+            raise ValueError(
+                f"window {w} exceeds the sketch's window_ticks {sk_window(sk)}: "
+                "older sightings may already be decayed, so widening at query "
+                "time would produce false negatives"
+            )
+        if w != sk_window(sk):
+            sk, raw = _with_window(sk, w), None  # the stored payload has the old window
+        key = self._key_doc()[0]
+        # the payload goes straight to the broadcast, without a
+        # createDataFrame → collect round trip of the state bytes
+        hits = (
+            seen_within_payloads(
+                spark, [("", raw if raw is not None else sk.to_bytes())],
+                keys.select(F.col(key).alias("key")), now, only_seen=True,
+            )
+            .select(F.col("key").alias(key))
+            .distinct()
+        )
+        done = self.done(checkpoint_dir, exclude_epoch)
+        ledgers = {name: self.ledger(spark, checkpoint_dir, name, done) for name in self.ledgers}
+        assert all(df is not None for df in ledgers.values()), (
+            "completed shard without its ledgers"
+        )
+        return hits, F.col("tick").between(now - w + 1, now), ledgers
+
+    def commit(self, spark, checkpoint_dir: str, now: int, params, partitions,
+               rows: list[DataFrame], meta: dict, hook=None) -> None:
+        """Append one shard in the commit order. ``rows`` are the
+        ledgers' rows, in declared order and without the shard column;
+        the sketch indexes the first ledger's keys. ``hook()`` runs just
+        before the lineage row, whose meta is ``meta`` plus shard and now."""
+        from ..pipeline import SketchSpec, build_sketches
+
+        params = params if params is not None else _DEFAULT_PARAMS
+        kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
+        key, doc = self._key_doc()
+        shaped = rows[0].select(
+            F.col(doc).alias("doc_id"),
+            F.array(key).alias("tokens"),
+            F.lit(1).alias("n_tok"),
+            F.col("tick").cast("long").alias("tick"),
+        )
+        spec = SketchSpec(self.spec, kind, params, value="tokens")
+        built = build_sketches(
+            shaped, [spec], group_cols=(), tick_col=F.col("tick"), partitions=partitions,
+        ).collect()
+        shard = len(self.completed(checkpoint_dir))
+        for name in ("sketch_state", *self.ledgers):
+            heal_swap(self.path(checkpoint_dir, name))
+        append_rows(self.path(checkpoint_dir, "sketch_state"),
+                    [(*r, shard) for r in built if r["spec"] == self.spec], SHARD_SCHEMA)
+        for (name, ddl), df in zip(self.ledgers.items(), rows):
+            # cast to the DDL readers apply: e.g. an array<double>
+            # embedding would commit fine and then fail every later read
+            df.withColumn("shard", F.lit(shard)).selectExpr(
+                *(f"cast({c} as {t}) {c}" for c, t in _ddl_cols(ddl))
+            ).write.mode("append").parquet(self.path(checkpoint_dir, name))
+        if hook is not None:
+            hook()
+        meta = {"shard": shard, "now": int(now), **meta}
+        append_rows(self.path(checkpoint_dir, "lineage"),
+                    [(shard, json.dumps(meta, sort_keys=True))], LINEAGE_SCHEMA)
 
 
-def _swap_dir(write_fn, path: str) -> None:
-    """Atomic-enough directory replacement shared by compaction and
-    ledger expiry: write_fn(tmp) produces the replacement, then the
-    two-rename swap leaves either the old dir, the _old fallback, or
-    the new dir visible at every crash point (_read_swap handles all
-    three)."""
-    import shutil
-
-    tmp, old = path + "_swapping", path + "_old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_fn(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.move(path, old)  # crash here → loader uses _old
-    shutil.move(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _heal_swap(path: str) -> None:
-    """Finish a crashed _swap_dir before APPENDING to ``path``: if only
-    the _old copy exists, restore it as the primary. A plain
-    mode('append') write would otherwise recreate the primary
-    directory containing ONLY the new rows — _read_swap then prefers
-    it, shadowing the whole history in _old, and the next expiry
-    rmtree's _old forever (code-review r05). Readers never heal (no
-    mutation on a query path); every state/ledger writer must call
-    this first."""
-    if not os.path.exists(path) and os.path.exists(path + "_old"):
-        os.rename(path + "_old", path)
-
-
-def _completed_metas(spark, lineage_path: str) -> list[dict]:
-    """Lineage metadata of completed shards at ``lineage_path``, in
-    shard order — shared by all three incremental operators
-    (code-review r05: the recovery rules must live once)."""
-    metas = read_table(lineage_path, LINEAGE_SCHEMA, columns=["meta"]).column("meta").to_pylist()
-    return sorted((json.loads(m) for m in metas), key=lambda m: m["shard"])
-
-
-def _load_sketch_state(spark, state_path: str, done: list[int], spec: str,
-                       with_raw: bool = False):
-    """Merged membership sketch over the completed shards' rows of
-    group '' (every incremental writer's group) plus the always-valid
-    shard=-1 compacted row, with read_table's _old fallback — the
-    single implementation behind the operators' loaders. Merge-all
-    within the completed set: union-only monoids are one-sided safe
-    under crash-retried shard ids (see load_dedup_state's docstring).
-
-    ``with_raw=True`` returns ``(sketch, raw_payload_or_None)``: when
-    exactly ONE row contributed, the merged sketch IS that row's
-    payload, and the probe path can broadcast the stored bytes as-is
-    instead of paying a zlib re-compress of the full bucket array
-    (round 6; post-compaction steady state is exactly one row)."""
-    from ..sketches import sketch_from_bytes
-
-    if not done:
-        return (None, None) if with_raw else None
-    ok = set(done) | {-1}
-    payloads = [
-        r["payload"]
-        for r in read_table(state_path, SHARD_SCHEMA, ["spec", "group", "payload", "shard"]).to_pylist()
-        if r["spec"] == spec and r["group"] == "" and r["shard"] in ok
-    ]
-    if not payloads:
-        return (None, None) if with_raw else None
-    sk = sketch_from_bytes(payloads[0])
-    for p in payloads[1:]:
-        sk = sk.merge(sketch_from_bytes(p))
-    if with_raw:
-        return sk, (payloads[0] if len(payloads) == 1 else None)
-    return sk
-
-
-def _done_shards(metas: list[dict], exclude_epoch) -> list[int]:
-    """Completed shard ids, optionally excluding shards committed by a
-    prior ATTEMPT of the same stream epoch: when a multi-operator guard
-    crashes after operator 1 committed but before the final epoch
-    marker, the replay must not treat operator 1's own half-epoch
-    output as history (every doc would be flagged a duplicate of
-    itself and the epoch's clean output would be lost)."""
-    return [
-        int(m["shard"])
-        for m in metas
-        if exclude_epoch is None or m.get("epoch") != int(exclude_epoch)
-    ]
+_EXACT = _Checkpoint("", DEDUP_SPEC, {"fp_ledger": LEDGER_DDL})
 
 
 def load_dedup_state(spark, checkpoint_dir: str, exclude_epoch=None,
                      with_raw: bool = False):
-    """Merged membership sketch from all COMPLETED shards (those with
-    a durable lineage row), or None if no shard ever completed.
-
-    Filtering by lineage is what makes the sketch-first / ledger-second
-    / lineage-last write order an actual recovery protocol (code-review
-    r04): an ingest that died between the sketch write and the ledger
-    write leaves orphan sketch rows, and before this fix a
-    missing-ledger checkpoint crashed the probe outright.
-
-    Within the completed shards, ALL rows are merged — deliberately
-    NOT the pick-one-row-per-shard retry dedupe state.load_state uses
-    for additive sketches: a crash-retried ingest reuses the orphan's
-    shard id, and picking one row could keep the orphan and DROP the
-    retry's fingerprints — a false negative, i.e. a silently missed
-    duplicate forever. The membership sketch is a union-only monoid,
-    so over-merging is one-sided safe: an orphan's extra fingerprints
-    only create candidate hits the ledger verification kills, while
-    n_items (advisory here) may double-count.
-
-    ``exclude_epoch`` drops shards whose lineage meta carries that
-    stream epoch (see _done_shards). Safe against the shard=-1
-    compacted row because compaction only runs after an epoch FULLY
-    commits, so a same-epoch shard can never have been folded into it
-    by the time a replay needs the exclusion."""
-    state_path, _, _ = _paths(checkpoint_dir)
-    done = _done_shards(completed_shards(spark, checkpoint_dir), exclude_epoch)
-    return _load_sketch_state(spark, state_path, done, DEDUP_SPEC,
-                              with_raw=with_raw)
+    """Merged membership sketch of the completed shards, or None if no
+    shard ever completed; ``exclude_epoch`` and ``with_raw`` as in the
+    module docstring and _Checkpoint.load."""
+    return _EXACT.load(checkpoint_dir, exclude_epoch, with_raw)
 
 
 def compact_dedup_checkpoint(spark, checkpoint_dir: str):
     """Fold every completed shard's sketch rows into ONE shard=-1 row,
-    atomically replacing the sketch_state directory (aside-rename swap,
-    same crash protocol as state.compact_checkpoint — load falls back
-    to the _old copy if a crash lands between the renames). Ledger and
-    lineage are untouched: the ledger is read with columnar pushdown
-    and lineage rows are tiny, but the sketch-state merge was
-    O(shards × payload) per load — the unbounded per-trigger cost
-    code-review r04 flagged for long-running streaming ingest. Safe
-    and idempotent any time; returns the merged sketch (None if the
-    checkpoint is empty)."""
-    state_path, _, _ = _paths(checkpoint_dir)
-    return _compact_sketch_state(
-        spark, state_path, load_dedup_state(spark, checkpoint_dir), DEDUP_SPEC
-    )
-
-
-def _compact_sketch_state(spark, state_path: str, sk, spec: str):
-    """Shared body of the exact/near compactors: fold the merged
-    sketch into ONE always-valid shard=-1 row via the _swap_dir crash
-    protocol."""
-    if sk is None:
-        return None
-    _swap_dir(
-        lambda tmp: append_rows(tmp, [(spec, "", sk.to_bytes(), int(sk.n_items), -1)], SHARD_SCHEMA),
-        state_path,
-    )
-    return sk
+    replacing the sketch_state directory (io.swap_dir). Without it every
+    ingest re-merges O(shards) sketch rows. Ledgers and lineage are
+    untouched; expire_ledgers bounds the ledgers. Safe and idempotent
+    any time; returns the merged sketch (None if the checkpoint is
+    empty)."""
+    return _EXACT.compact(checkpoint_dir)
 
 
 def ledger_df(
     spark, checkpoint_dir: str, completed_only: bool = True, exclude_epoch=None
 ) -> DataFrame | None:
     """The fp ledger, restricted (by default) to completed shards so a
-    half-written ingest's rows are invisible — the same recovery rule
-    as load_dedup_state."""
-    _, ledger_path, _ = _paths(checkpoint_dir)
-    df = _read_swap(spark, ledger_path, LEDGER_DDL)
-    if df is None:
-        return None
-    if completed_only:
-        done = _done_shards(completed_shards(spark, checkpoint_dir), exclude_epoch)
-        df = df.where(F.col("shard").isin(done))
-    return df
+    half-written ingest's rows are invisible."""
+    done = _EXACT.done(checkpoint_dir, exclude_epoch) if completed_only else None
+    return _EXACT.ledger(spark, checkpoint_dir, "fp_ledger", done)
 
 
 def expire_ledgers(
     spark, checkpoint_dir: str, now: int, window: int | None = None
 ) -> dict:
-    """Prune DECAYED rows from every ledger under ``checkpoint_dir`` —
-    the exact-dedup fp ledger and, if present, the near-dup band and
-    sig ledgers. Without this, ledgers grow monotonically: the query
-    path filters out-of-window rows (so correctness never depended on
-    expiry) but "state = O(retained docs)" silently becomes O(all docs
-    ever) on a month-long ingest (VERDICT r04 "What's missing" #1).
+    """Prune DECAYED rows from every ledger under ``checkpoint_dir``.
+    Without this, ledgers grow monotonically: the query path filters
+    out-of-window rows (so correctness never depended on expiry) but
+    "state = O(retained docs)" silently becomes O(all docs ever) on a
+    month-long ingest.
 
     A row is retained iff ``tick >= now - window + 1`` — the oldest
     tick any future query can see, because query windows may only ever
-    NARROW a sketch's configured window (queries._with_window) and
-    ``now`` is monotone. ``window`` defaults to each path's own sketch
-    window_ticks. Each ledger is rewritten via the same aside-rename
-    swap as compaction (crash between renames → _read_swap falls back
-    to the _old copy). Safe and idempotent any time; the sketch itself
-    needs no pruning — it decays by construction. Returns
-    {ledger_name: rows_kept}."""
+    NARROW a sketch's configured window and ``now`` is monotone.
+    ``window`` defaults to each operator's own sketch window_ticks.
+    Each ledger is rewritten via io.swap_dir. Safe and idempotent any
+    time; the sketch itself needs no pruning — it decays by
+    construction. Returns {ledger_name: rows_kept} over fp_ledger,
+    band_ledger, sig_ledger, passage_ledger, bucket_ledger and
+    vec_ledger, for the ledgers that exist."""
     from ..queries import sk_window
 
     kept: dict[str, int] = {}
-    _, fp_path, _ = _paths(checkpoint_dir)
-    band_path, sig_path = _near_paths(checkpoint_dir)[1:3]
-    wcache: dict[str, int | None] = {}
-
-    def win_of(kind: str, loader) -> int | None:
-        # one state load per operator family, not per ledger (the near
-        # sketch backs both the band and sig ledgers)
-        if kind not in wcache:
-            sketch = loader()
-            wcache[kind] = None if sketch is None else sk_window(sketch)
-        return wcache[kind]
-
-    for name, path, ddl, kind, loader in (
-        ("fp_ledger", fp_path, LEDGER_DDL, "exact",
-         lambda: load_dedup_state(spark, checkpoint_dir)),
-        ("band_ledger", band_path, BAND_LEDGER_DDL, "near",
-         lambda: _load_near_state(spark, checkpoint_dir)),
-        ("sig_ledger", sig_path, SIG_LEDGER_DDL, "near",
-         lambda: _load_near_state(spark, checkpoint_dir)),
-        ("passage_ledger", _passage_paths(checkpoint_dir)[1], PASSAGE_LEDGER_DDL,
-         "passages", lambda: _load_passage_state(spark, checkpoint_dir)),
-        ("bucket_ledger", _emb_paths(checkpoint_dir)[1], EMB_BUCKET_LEDGER_DDL,
-         "emb", lambda: _load_emb_state(spark, checkpoint_dir)),
-        ("vec_ledger", _emb_paths(checkpoint_dir)[2], EMB_VEC_LEDGER_DDL,
-         "emb", lambda: _load_emb_state(spark, checkpoint_dir)),
-    ):
-        df = _read_swap(spark, path, ddl)
-        if df is None:
-            continue
-        w = window if window is not None else win_of(kind, loader)
-        if w is None:
-            continue
-        live = df.where(F.col("tick") >= F.lit(int(now) - int(w) + 1))
-        # localCheckpoint BEFORE the swap: the plan reads the very
-        # directory the swap replaces (same cache-invalidation trap as
-        # incremental_dedup's annotated frame)
-        live = live.localCheckpoint(eager=True)
-        _swap_dir(
-            lambda tmp, live=live: live.write.mode("overwrite").parquet(tmp), path
-        )
-        kept[name] = live.count()
-        live.unpersist()
+    for cp in (_EXACT, _NEAR, _PASSAGES, _EMB):
+        w = window
+        for name in cp.ledgers:
+            df = cp.ledger(spark, checkpoint_dir, name)
+            if df is None:
+                continue
+            if w is None:
+                sk = cp.load(checkpoint_dir)
+                if sk is None:
+                    break
+                w = sk_window(sk)
+            # localCheckpoint BEFORE the swap: the plan reads the very
+            # directory the swap replaces (same cache-invalidation trap as
+            # incremental_dedup's annotated frame)
+            live = df.where(F.col("tick") >= F.lit(int(now) - int(w) + 1)).localCheckpoint(eager=True)
+            swap_dir(lambda tmp, live=live: live.write.mode("overwrite").parquet(tmp),
+                     cp.path(checkpoint_dir, name))
+            # keys are unique across operators: the passages ledger
+            # directory shares the exact operator's name fp_ledger
+            kept["passage_ledger" if cp is _PASSAGES else name] = live.count()
+            live.unpersist()
     return kept
 
 
 def completed_shards(spark, checkpoint_dir: str) -> list[dict]:
     """Lineage metadata of completed ingests, in shard order."""
-    return _completed_metas(spark, _paths(checkpoint_dir)[2])
+    return _EXACT.completed(checkpoint_dir)
 
 
 def _shard_fps(new_df: DataFrame, text_col: str, tick_col, now: int) -> DataFrame:
@@ -335,7 +361,7 @@ def annotate_against_history(
     exposed separately so plan gates (tools/explain_plans.py) can
     .explain() the real operator — the probe must stay a pure map and
     the ledger verify a BroadcastHashJoin — instead of a hand-built
-    replica (code-review r04). Callers who want the flags should use
+    replica. Callers who want the flags should use
     incremental_dedup(update_state=False): the raw plan re-reads the
     checkpoint on every action.
 
@@ -343,59 +369,28 @@ def annotate_against_history(
     _shard_fps(new_df, ...) — the returned plan references the fp
     frame THREE times (probe keys, intra-shard firsts, the annotated
     left side), so a caller that materializes it once saves two
-    scan+hash passes over the shard text per action (round 6, guide
-    §2.4; incremental_dedup does exactly this)."""
-    from ..queries import _with_window, seen_within_payloads, sk_window
-
+    scan+hash passes over the shard text per action (incremental_dedup
+    does exactly this)."""
     fps = fps_df if fps_df is not None else _shard_fps(new_df, text_col, tick_col, now)
 
     # ---- history probe: broadcast sketch, then exact ledger verify ----
-    sk, raw = load_dedup_state(
-        spark, checkpoint_dir, exclude_epoch=exclude_epoch, with_raw=True
-    )
-    if sk is not None:
-        w = window if window is not None else sk_window(sk)
-        if w > sk_window(sk):
-            raise ValueError(
-                f"window {w} exceeds the sketch's window_ticks "
-                f"{sk_window(sk)}: older sightings may already be decayed, "
-                "so widening at query time would produce false negatives"
-            )
-        if w != sk_window(sk):
-            sk = _with_window(sk, w)
-            raw = None  # re-windowed: stored payload no longer matches
-        # seen_within_payloads: the payload goes straight to the
-        # broadcast (content-cached), skipping the createDataFrame →
-        # collect round trip of ~state-size bytes per probe (round 6)
-        payload = raw if raw is not None else sk.to_bytes()
-        hits = (
-            seen_within_payloads(
-                spark, [("", payload)],
-                fps.select(F.col("fp").alias("key")), now, only_seen=True,
-            )
-            .select(F.col("key").alias("fp"))
-            .distinct()
-        )
+    probed = _EXACT.probe(spark, checkpoint_dir, fps, now, window, exclude_epoch)
+    if probed is None:
+        verified = spark.createDataFrame([], "fp long, hist_doc_id string")
+    else:
+        hits, live, led = probed
         # candidates are the tiny side: broadcast them INTO the ledger
         # scan so history is filtered, never shuffled. max(tick) per fp
         # is the latest retained sighting (re-ingests after decay append
         # a fresh ledger row — and a crash-retried shard may have
-        # appended its ledger rows twice, which this max collapses);
-        # the window filter mirrors TimingBloomFilter.contains_batch:
-        # tick in [now - w + 1, now]. led is never None here: a
-        # non-None sketch implies a completed shard, whose lineage row
-        # is only written after its ledger append.
-        led = ledger_df(spark, checkpoint_dir, exclude_epoch=exclude_epoch)
-        assert led is not None, "completed shard without a ledger directory"
+        # appended its ledger rows twice, which this max collapses)
         verified = (
-            led.join(F.broadcast(hits), "fp")
-            .where((F.col("tick") >= F.lit(now - w + 1)) & (F.col("tick") <= F.lit(now)))
+            led["fp_ledger"].join(F.broadcast(hits), "fp")
+            .where(live)
             .groupBy("fp")
             .agg(F.max(F.struct("tick", "doc_id")).alias("_best"))
             .select("fp", F.col("_best.doc_id").alias("hist_doc_id"))
         )
-    else:
-        verified = spark.createDataFrame([], "fp long, hist_doc_id string")
 
     # ---- intra-shard first occurrence (shard-local shuffle) ----
     firsts = fps.groupBy("fp").agg(F.min("doc_id").alias("_first_doc"))
@@ -456,22 +451,14 @@ def incremental_dedup(
     capacity for the expected corpus-wide distinct count or cap the
     expected shard count via params.max_fill_factor yourself.
     ``window`` narrows the query window below the sketch's configured
-    ``window_ticks`` (never above — queries._with_window semantics).
+    ``window_ticks``. ``meta_extra`` joins the shard's lineage meta;
+    ``pre_lineage_hook(ann)`` and ``exclude_epoch``: module docstring.
     """
-    from ..params import ScalingParams, TimingParams
-    from ..pipeline import SketchSpec, build_sketches
-
-    if params is None:
-        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
-    state_path, ledger_path, lineage_path = _paths(checkpoint_dir)
-
     # one scan of the shard text: the annotated plan references the fp
     # frame three times (probe keys, intra-shard firsts, the annotated
     # left side) and an un-materialized fps would re-scan + re-hash the
-    # shard per reference inside the localCheckpoint job below (round
-    # 6, guide §2.4 — measured 3 corpus scans in one job). Shard-sized
-    # rows only (doc_id, fp, tick ≈ 25 B/doc).
+    # shard per reference inside the localCheckpoint job below.
+    # Shard-sized rows only (doc_id, fp, tick ≈ 25 B/doc).
     fps = _shard_fps(new_df, text_col, tick_col, now).localCheckpoint(eager=True)
     ann = annotate_against_history(
         spark, new_df, checkpoint_dir, now,
@@ -488,57 +475,20 @@ def incremental_dedup(
     ann = ann.localCheckpoint(eager=True)
 
     if update_state:
-        shard = len(completed_shards(spark, checkpoint_dir))
-        survivors = ann.where(~F.col("is_dup_history") & ~F.col("is_dup_intra"))
-        # membership build over the survivors' fps, through the SAME
-        # partial/merge machinery as every other sketch build (tokens
-        # stream = [fp]; per-batch dedup keeps max tick, which for
-        # distinct fps is THE tick)
-        shaped = survivors.select(
-            "doc_id",
-            F.array("fp").alias("tokens"),
-            F.lit(1).alias("n_tok"),
-            "tick",
-        )
-        spec = SketchSpec(DEDUP_SPEC, kind, params, value="tokens")
-        built = build_sketches(
-            shaped, [spec], group_cols=(), tick_col=F.col("tick"),
-            partitions=partitions,
-        ).where(F.col("spec") == DEDUP_SPEC)
-        # durability order mirrors state.build_resumable: sketch rows
-        # first, ledger second, lineage LAST — a shard is only complete
-        # once everything before its lineage row is durable. Heal any
-        # crashed expiry/compaction swap first: appending to a missing
-        # primary dir would shadow the _old history (code-review r05)
-        _heal_swap(state_path)
-        _heal_swap(ledger_path)
-        built.withColumn("shard", F.lit(shard)).selectExpr(
-            "spec", "group", "payload", "n_items", "cast(shard as int) shard"
-        ).write.mode("append").parquet(state_path)
-        survivors.select("fp", "doc_id", "tick", F.lit(shard).cast("int").alias("shard")) \
-            .write.mode("append").parquet(ledger_path)
-        if pre_lineage_hook is not None:
-            # caller-side durable output (e.g. the streaming guard's
-            # clean stream) must land BEFORE the lineage marker: once
-            # lineage commits, a replay is skipped, so anything written
-            # after it would be lost to a crash in between
-            pre_lineage_hook(ann)
         counts = ann.agg(
             F.count("*").alias("n"),
             F.sum(F.col("is_dup_history").cast("long")).alias("h"),
             F.sum(F.col("is_dup_intra").cast("long")).alias("i"),
         ).collect()[0]
-        n_new, n_h, n_i = int(counts["n"]), int(counts["h"] or 0), int(counts["i"] or 0)
-        meta = {
-            "shard": shard,
-            "now": int(now),
-            "n_docs": n_new,
-            "n_dup_history": n_h,
-            "n_dup_intra": n_i,
-            "n_retained": n_new - n_h - n_i,
-            **(meta_extra or {}),
-        }
-        append_rows(lineage_path, [(shard, json.dumps(meta, sort_keys=True))], LINEAGE_SCHEMA)
+        n, h, i = int(counts["n"]), int(counts["h"] or 0), int(counts["i"] or 0)
+        survivors = ann.where(~F.col("is_dup_history") & ~F.col("is_dup_intra"))
+        _EXACT.commit(
+            spark, checkpoint_dir, now, params, partitions,
+            [survivors.select("fp", "doc_id", "tick")],
+            {"n_docs": n, "n_dup_history": h, "n_dup_intra": i, "n_retained": n - h - i,
+             **(meta_extra or {})},
+            hook=pre_lineage_hook and (lambda: pre_lineage_hook(ann)),
+        )
     return ann
 
 
@@ -850,13 +800,10 @@ class StreamingIngestGuard:
             emb_ann.unpersist()
         self._batches_done += 1
         if self.compact_every and self._batches_done % self.compact_every == 0:
-            compact_dedup_checkpoint(self.spark, self.checkpoint_dir)
-            if self.near:
-                compact_near_checkpoint(self.spark, self.checkpoint_dir)
-            if self.passages:
-                compact_passages_checkpoint(self.spark, self.checkpoint_dir)
-            if self.embeddings:
-                compact_emb_checkpoint(self.spark, self.checkpoint_dir)
+            for on, cp in ((True, _EXACT), (self.near, _NEAR), (self.passages, _PASSAGES),
+                           (self.embeddings, _EMB)):
+                if on:
+                    cp.compact(self.checkpoint_dir)
         if self.expire_every and self._batches_done % self.expire_every == 0:
             expire_ledgers(self.spark, self.checkpoint_dir, now=now)
 
@@ -881,7 +828,7 @@ class StreamingIngestGuard:
 
 # --------------------------------------------------------------------
 # incremental NEAR-dup: cross-shard MinHash-LSH against checkpointed
-# state (round 4 — rounds out the exact-fp guard above)
+# state
 # --------------------------------------------------------------------
 
 NEAR_SPEC = "near_dup_band"
@@ -893,20 +840,8 @@ NEAR_ANNOTATED_DDL = (
 )
 
 
-def _near_paths(checkpoint_dir: str) -> tuple[str, str, str, str]:
-    """All near-dup state lives under <checkpoint_dir>/near — its OWN
-    sketch_state and lineage, fully disjoint from incremental_dedup's
-    (code-review r04: a shared sketch_state dir meant exact-dedup
-    compaction would atomically replace the directory and destroy the
-    band sketch; shared lineage let one operator's committed shard
-    number validate the other's half-committed orphan rows)."""
-    base = os.path.join(checkpoint_dir, "near")
-    return (
-        os.path.join(base, "sketch_state"),
-        os.path.join(base, "band_ledger"),
-        os.path.join(base, "sig_ledger"),
-        os.path.join(base, "lineage"),
-    )
+_NEAR = _Checkpoint("near", NEAR_SPEC,
+                    {"band_ledger": BAND_LEDGER_DDL, "sig_ledger": SIG_LEDGER_DDL})
 
 
 def near_history_matches(
@@ -940,50 +875,18 @@ def near_history_matches(
       the shard's own signature frame.
     The only exchanges left are distinct/groupBy over SHARD-sized
     candidate rows."""
-    from ..queries import _with_window, seen_within_payloads, sk_window
-
-    empty = spark.createDataFrame(
-        [], "doc_id string, hist_doc_id string, est_jaccard double"
-    )
-    sk, raw = _load_near_state(
-        spark, checkpoint_dir, exclude_epoch=exclude_epoch, with_raw=True
-    )
-    if sk is None:
-        return empty
-    w = window if window is not None else sk_window(sk)
-    if w > sk_window(sk):
-        raise ValueError(
-            f"window {w} exceeds the sketch's window_ticks {sk_window(sk)}"
-        )
-    if w != sk_window(sk):
-        sk = _with_window(sk, w)
-        raw = None  # re-windowed: stored payload no longer matches
-    hits = (
-        seen_within_payloads(
-            spark, [("", raw if raw is not None else sk.to_bytes())],
-            banded.select(F.col("bkey").alias("key")), now, only_seen=True,
-        )
-        .select(F.col("key").alias("bkey"))
-        .distinct()
-    )
-    done = _done_shards(_near_completed(spark, checkpoint_dir), exclude_epoch)
-    band_path, sig_path = _near_paths(checkpoint_dir)[1:3]
-    band_raw = _read_swap(spark, band_path, BAND_LEDGER_DDL)
-    sig_raw = _read_swap(spark, sig_path, SIG_LEDGER_DDL)
-    assert band_raw is not None and sig_raw is not None, (
-        "completed near shard without its ledgers"
-    )
-    band_led = band_raw.where(
-        (F.col("shard").isin(done))
-        & (F.col("tick") >= F.lit(now - w + 1)) & (F.col("tick") <= F.lit(now))
-    )
+    probed = _NEAR.probe(spark, checkpoint_dir, banded, now, window, exclude_epoch)
+    if probed is None:
+        return spark.createDataFrame([], "doc_id string, hist_doc_id string, est_jaccard double")
+    hits, live, led = probed
     # candidate pairs: new docs sharing a hit band key with a retained
     # doc. The shard side (banded ⋈ hits — bounded by shard size × hit
     # rate) is broadcast INTO the band-ledger scan, so the O(retained ×
     # bands) ledger is the streamed side and never shuffles
     probe = banded.join(F.broadcast(hits), "bkey")
     cand = (
-        band_led.select("bkey", F.col("doc_id").alias("hist_doc_id"))
+        led["band_ledger"].where(live)
+        .select("bkey", F.col("doc_id").alias("hist_doc_id"))
         .join(F.broadcast(probe), "bkey")
         .select("doc_id", "hist_doc_id")
         .distinct()
@@ -993,8 +896,7 @@ def near_history_matches(
     # ledger's columnar scan, which likewise never shuffles
     hist_ids = cand.select(F.col("hist_doc_id").alias("doc_id")).distinct()
     sig_led = (
-        sig_raw
-        .where(F.col("shard").isin(done))
+        led["sig_ledger"]
         .join(F.broadcast(hist_ids), "doc_id", "left_semi")
         .select(F.col("doc_id").alias("hist_doc_id"), F.col("sig").alias("hsig"))
     )
@@ -1055,33 +957,19 @@ def incremental_near_dup(
       estimator the batch chain verifies with before exact Jaccard).
       An exact text clone has an identical signature, so clones are
       flagged with certainty (est_jaccard = 1) — what the oracle pins.
-    - survivors append their band keys, sigs, and lineage (same
-      sketch-first/ledgers/lineage-LAST recovery protocol; replays
-      self-correct exactly as in incremental_dedup).
+    - survivors append their band keys, sigs, and lineage (the
+      module docstring's commit order; replays self-correct exactly as
+      in incremental_dedup).
 
     Flags: is_near_dup_history (some retained in-window doc's
     signature matches ≥ threshold), is_near_dup_intra (a same-shard
     doc with smaller doc_id matches ≥ threshold and the doc is not
     already a history dup), hist_doc_id = best-matching historical doc
     (max est_jaccard, ties → max doc_id), est_jaccard = that match's
-    estimate. A checkpoint_dir may be shared with incremental_dedup:
-    ALL near-dup state (including its lineage) lives under
-    <checkpoint_dir>/near, fully disjoint from the exact-dedup state,
-    so neither operator's compaction, shard numbering, or recovery can
-    touch the other's (code-review r04).
-
-    ``meta_extra`` / ``pre_lineage_hook`` / ``exclude_epoch`` mirror
-    incremental_dedup exactly (epoch tagging, caller-durable output
-    strictly before the lineage marker, and same-epoch shard exclusion
-    on multi-operator replay — see StreamingIngestGuard)."""
-    from ..params import ScalingParams, TimingParams
-    from ..pipeline import SketchSpec, build_sketches
+    estimate. A checkpoint_dir may be shared with the other incremental
+    operators (state under <checkpoint_dir>/near). ``meta_extra`` /
+    ``pre_lineage_hook`` / ``exclude_epoch`` mirror incremental_dedup."""
     from .dedup import banded_signatures, minhash_signatures
-
-    if params is None:
-        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
-    state_path, band_path, sig_path, lineage_path = _near_paths(checkpoint_dir)
 
     src = new_df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -1155,88 +1043,34 @@ def incremental_near_dup(
     ).localCheckpoint(eager=True)
 
     if update_state:
-        shard = len(_near_completed(spark, checkpoint_dir))
-        keep = ann.where(
-            ~F.col("is_near_dup_history") & ~F.col("is_near_dup_intra")
-        ).select("doc_id")
-        kept_banded = banded.join(F.broadcast(keep), "doc_id")
-        shaped = kept_banded.select(
-            F.col("doc_id"),
-            F.array("bkey").alias("tokens"),
-            F.lit(1).alias("n_tok"),
-            F.lit(now).cast("long").alias("tick"),
-        )
-        spec = SketchSpec(NEAR_SPEC, kind, params, value="tokens")
-        built = build_sketches(
-            shaped, [spec], group_cols=(), tick_col=F.col("tick"),
-            partitions=partitions,
-        ).where(F.col("spec") == NEAR_SPEC)
-        for _pth in (state_path, band_path, sig_path):
-            _heal_swap(_pth)  # see incremental_dedup (code-review r05)
-        built.withColumn("shard", F.lit(shard)).selectExpr(
-            "spec", "group", "payload", "n_items", "cast(shard as int) shard"
-        ).write.mode("append").parquet(state_path)
-        kept_banded.select(
-            "bkey", "doc_id", F.lit(now).cast("long").alias("tick"),
-            F.lit(shard).cast("int").alias("shard"),
-        ).write.mode("append").parquet(band_path)
-        sig.join(F.broadcast(keep), "doc_id").select(
-            "doc_id", "sig", F.lit(now).cast("long").alias("tick"),
-            F.lit(shard).cast("int").alias("shard"),
-        ).write.mode("append").parquet(sig_path)
-        if pre_lineage_hook is not None:
-            # caller-durable output must land BEFORE the lineage
-            # marker (same contract as incremental_dedup)
-            pre_lineage_hook(ann)
         counts = ann.agg(
             F.count("*").alias("n"),
             F.sum(F.col("is_near_dup_history").cast("long")).alias("h"),
             F.sum(F.col("is_near_dup_intra").cast("long")).alias("i"),
         ).collect()[0]
         n, h, i = int(counts["n"]), int(counts["h"] or 0), int(counts["i"] or 0)
-        meta = {
-            "shard": shard, "now": int(now), "kind": "near_dup",
-            "n_docs": n, "n_near_dup_history": h, "n_near_dup_intra": i,
-            "n_retained": n - h - i,
-            **(meta_extra or {}),
-        }
-        append_rows(lineage_path, [(shard, json.dumps(meta, sort_keys=True))], LINEAGE_SCHEMA)
+        keep = ann.where(
+            ~F.col("is_near_dup_history") & ~F.col("is_near_dup_intra")
+        ).select("doc_id")
+        tick = F.lit(now).alias("tick")
+        _NEAR.commit(
+            spark, checkpoint_dir, now, params, partitions,
+            [banded.join(F.broadcast(keep), "doc_id").select("bkey", "doc_id", tick),
+             sig.join(F.broadcast(keep), "doc_id").select("doc_id", "sig", tick)],
+            {"kind": "near_dup", "n_docs": n, "n_near_dup_history": h,
+             "n_near_dup_intra": i, "n_retained": n - h - i, **(meta_extra or {})},
+            hook=pre_lineage_hook and (lambda: pre_lineage_hook(ann)),
+        )
     return ann
 
 
-def _near_completed(spark, checkpoint_dir: str) -> list[dict]:
-    """Near-dup lineage metadata (its OWN lineage dir under near/)."""
-    return _completed_metas(spark, _near_paths(checkpoint_dir)[3])
-
-
-def _load_near_state(spark, checkpoint_dir: str, exclude_epoch=None,
-                     with_raw: bool = False):
-    """Merged band-key membership sketch over completed shards (same
-    lineage-gated, merge-all recovery + same-epoch-exclusion rules as
-    load_dedup_state — one implementation, _load_sketch_state)."""
-    done = _done_shards(_near_completed(spark, checkpoint_dir), exclude_epoch)
-    return _load_sketch_state(
-        spark, _near_paths(checkpoint_dir)[0], done, NEAR_SPEC, with_raw=with_raw
-    )
-
-
 def compact_near_checkpoint(spark, checkpoint_dir: str):
-    """Near-dup analogue of compact_dedup_checkpoint: fold every
-    completed near shard's band-key sketch rows into ONE shard=-1 row
-    (the row _load_near_state already accepted but nothing wrote —
-    VERDICT r04 "What's missing" #1). Without it a long-running
-    near-dup ingest re-merges O(shards × payload) sketch rows on every
-    probe. Ledgers and lineage are untouched (columnar-pushdown reads);
-    expire_ledgers handles their growth. Safe and idempotent any
-    time."""
-    state_path = _near_paths(checkpoint_dir)[0]
-    return _compact_sketch_state(
-        spark, state_path, _load_near_state(spark, checkpoint_dir), NEAR_SPEC
-    )
+    """Near-dup analogue of compact_dedup_checkpoint."""
+    return _NEAR.compact(checkpoint_dir)
 
 
 # --------------------------------------------------------------------
-# incremental PASSAGE-level dedup (round 5): repeated-passage masking
+# incremental PASSAGE-level dedup: repeated-passage masking
 # of a new shard against checkpointed history — composes the rolling
 # window-fingerprint kernel (dedup.passage_fingerprints) with the
 # sketch+ledger incremental machinery above, completing the family:
@@ -1251,43 +1085,12 @@ PASSAGE_ANNOTATED_DDL = (
 )
 
 
-def _passage_paths(checkpoint_dir: str) -> tuple[str, str, str]:
-    """All passage state lives under <checkpoint_dir>/passages — its
-    own sketch_state, fp ledger, and lineage, disjoint from both the
-    exact-dedup and near-dup state (the namespacing rule code-review
-    r04 established: no operator's compaction/recovery/shard numbering
-    may touch another's)."""
-    base = os.path.join(checkpoint_dir, "passages")
-    return (
-        os.path.join(base, "sketch_state"),
-        os.path.join(base, "fp_ledger"),
-        os.path.join(base, "lineage"),
-    )
-
-
-def _passage_completed(spark, checkpoint_dir: str) -> list[dict]:
-    return _completed_metas(spark, _passage_paths(checkpoint_dir)[2])
-
-
-def _load_passage_state(spark, checkpoint_dir: str, exclude_epoch=None,
-                        with_raw: bool = False):
-    """Merged window-fp membership sketch over completed passage
-    shards (lineage-gated, merge-all, same-epoch-exclusion — the
-    recovery rules of load_dedup_state, one implementation)."""
-    done = _done_shards(_passage_completed(spark, checkpoint_dir), exclude_epoch)
-    return _load_sketch_state(
-        spark, _passage_paths(checkpoint_dir)[0], done, PASSAGE_SPEC,
-        with_raw=with_raw,
-    )
+_PASSAGES = _Checkpoint("passages", PASSAGE_SPEC, {"fp_ledger": PASSAGE_LEDGER_DDL})
 
 
 def compact_passages_checkpoint(spark, checkpoint_dir: str):
-    """Fold completed passage shards' sketch rows into one shard=-1
-    row (same protocol as compact_dedup_checkpoint)."""
-    state_path = _passage_paths(checkpoint_dir)[0]
-    return _compact_sketch_state(
-        spark, state_path, _load_passage_state(spark, checkpoint_dir), PASSAGE_SPEC
-    )
+    """Passage analogue of compact_dedup_checkpoint."""
+    return _PASSAGES.compact(checkpoint_dir)
 
 
 def incremental_passages(
@@ -1336,15 +1139,7 @@ def incremental_passages(
     scope — run the batch operator (mask_repeated_passages) on the
     shard first, then this against history.
     """
-    from ..params import ScalingParams, TimingParams
-    from ..pipeline import SketchSpec, build_sketches
-    from ..queries import _with_window, seen_within_payloads, sk_window
     from .dedup import passage_fingerprints
-
-    if params is None:
-        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
-    state_path, ledger_path, lineage_path = _passage_paths(checkpoint_dir)
 
     src = new_df.select(
         F.col("doc_id").cast("string").alias("doc_id"),
@@ -1356,49 +1151,19 @@ def incremental_passages(
         src, window=window, stride=stride, with_positions=True
     ).localCheckpoint(eager=True)
 
-    sk, raw = _load_passage_state(
-        spark, checkpoint_dir, exclude_epoch=exclude_epoch, with_raw=True
+    probed = _PASSAGES.probe(
+        spark, checkpoint_dir, wf.select("fp").distinct(), now, query_window, exclude_epoch
     )
-    if sk is not None:
-        w = query_window if query_window is not None else sk_window(sk)
-        if w > sk_window(sk):
-            raise ValueError(
-                f"window {w} exceeds the sketch's window_ticks {sk_window(sk)}"
-            )
-        if w != sk_window(sk):
-            sk = _with_window(sk, w)
-            raw = None  # re-windowed: stored payload no longer matches
-        hits = (
-            seen_within_payloads(
-                spark, [("", raw if raw is not None else sk.to_bytes())],
-                wf.select(F.col("fp").alias("key")).distinct(), now, only_seen=True,
-            )
-            .select(F.col("key").alias("fp"))
-            .distinct()
-        )
-        done = _done_shards(_passage_completed(spark, checkpoint_dir), exclude_epoch)
-        led = _read_swap(spark, ledger_path, PASSAGE_LEDGER_DDL)
-        assert led is not None, "completed passage shard without a ledger"
-        # hit fps (tiny) broadcast into the ledger scan — history
-        # filtered in place, never shuffled (the check-12/13 shape)
-        verified = (
-            led.where(
-                (F.col("shard").isin(done))
-                & (F.col("tick") >= F.lit(now - w + 1))
-                & (F.col("tick") <= F.lit(now))
-            )
-            .join(hits, "fp")
-            .select("fp")
-            .distinct()
-        )
+    if probed is None:
+        verified = spark.createDataFrame([], "fp long")
+    else:
+        hits, live, led = probed
         # NO forced broadcast anywhere in this operator: hits/verified
         # are fp-cardinality (~shard tokens/stride in the worst
         # re-crawl case), unlike the doc-cardinality sets the exact/
         # near operators broadcast — AQE broadcast-selects the common
         # small case and falls back to an fp-keyed shuffle otherwise
-        # (code-review r05)
-    else:
-        verified = spark.createDataFrame([], "fp long")
+        verified = led["fp_ledger"].where(live).join(hits, "fp").select("fp").distinct()
 
     perdoc = wf.groupBy("doc_id").agg(
         F.sum(F.size("pos_list")).cast("int").alias("n_windows")
@@ -1426,15 +1191,13 @@ def incremental_passages(
     ).localCheckpoint(eager=True)
 
     if update_state:
-        shard = len(_passage_completed(spark, checkpoint_dir))
         # only NEW fps enter history (suppressed spans don't refresh
         # ticks — decay semantics), and only via OCCURRENCES whose span
         # does not overlap a historical span of the same doc: a
         # boundary window straddling a masked region would otherwise be
         # recorded as "retained" while mask_against_history drops most
         # of its tokens, so a later identical span would be masked with
-        # NO surviving copy anywhere in the clean corpus (code-review
-        # r05 #4). Spans [p, p+W) and [q, q+W) overlap iff |p-q| < W.
+        # NO surviving copy anywhere in the clean corpus. Spans [p, p+W) and [q, q+W) overlap iff |p-q| < W.
         # Conservative by construction for callers who don't mask:
         # an unrecorded fp merely re-enters on its next sighting.
         wf_clean = (
@@ -1475,48 +1238,18 @@ def incremental_passages(
             )
             .localCheckpoint(eager=True)
         )
-        shaped = newfp.select(
-            F.col("keep_doc").alias("doc_id"),
-            F.array("fp").alias("tokens"),
-            F.lit(1).alias("n_tok"),
-            F.lit(now).cast("long").alias("tick"),
-        )
-        spec = SketchSpec(PASSAGE_SPEC, kind, params, value="tokens")
-        built = build_sketches(
-            shaped, [spec], group_cols=(), tick_col=F.col("tick"),
-            partitions=partitions,
-        ).where(F.col("spec") == PASSAGE_SPEC)
-        _heal_swap(state_path)
-        _heal_swap(ledger_path)  # see incremental_dedup (code-review r05)
-        built.withColumn("shard", F.lit(shard)).selectExpr(
-            "spec", "group", "payload", "n_items", "cast(shard as int) shard"
-        ).write.mode("append").parquet(state_path)
-        newfp.select(
-            "fp", "keep_doc", "keep_pos",
-            F.lit(now).cast("long").alias("tick"),
-            F.lit(shard).cast("int").alias("shard"),
-        ).write.mode("append").parquet(ledger_path)
-        if pre_lineage_hook is not None:
-            # caller-durable output (e.g. the masked clean shard) must
-            # land BEFORE the lineage marker — same exactly-once
-            # contract as incremental_dedup; without it a crash after
-            # lineage but before the caller persisted the masked text
-            # would re-run against history that now contains this very
-            # shard and mask the entire shard away (code-review r05 #2)
-            pre_lineage_hook(ann)
         counts = ann.agg(
             F.count("*").alias("n"),
             F.sum("n_windows").alias("w"),
             F.sum("n_hist_windows").alias("h"),
         ).collect()[0]
-        meta = {
-            "shard": shard, "now": int(now), "kind": "passages",
-            "n_docs": int(counts["n"]),
-            "n_windows": int(counts["w"] or 0),
-            "n_hist_windows": int(counts["h"] or 0),
-            **(meta_extra or {}),
-        }
-        append_rows(lineage_path, [(shard, json.dumps(meta, sort_keys=True))], LINEAGE_SCHEMA)
+        _PASSAGES.commit(
+            spark, checkpoint_dir, now, params, partitions,
+            [newfp.select("fp", "keep_doc", "keep_pos", F.lit(now).alias("tick"))],
+            {"kind": "passages", "n_docs": int(counts["n"]), "n_windows": int(counts["w"] or 0),
+             "n_hist_windows": int(counts["h"] or 0), **(meta_extra or {})},
+            hook=pre_lineage_hook and (lambda: pre_lineage_hook(ann)),
+        )
     return ann
 
 
@@ -1584,7 +1317,7 @@ def mask_against_history(
 
 
 # --------------------------------------------------------------------
-# incremental EMBEDDING-level dedup (round 5): semantic near-duplicate
+# incremental EMBEDDING-level dedup: semantic near-duplicate
 # detection of a new shard against checkpointed history — the fourth
 # granularity of the incremental family (exact doc / near doc /
 # passage / semantic), reusing similarity.hyperplane_buckets'
@@ -1599,38 +1332,13 @@ EMB_ANNOTATED_DDL = (
 )
 
 
-def _emb_paths(checkpoint_dir: str) -> tuple[str, str, str, str]:
-    """All embedding-dedup state lives under <checkpoint_dir>/emb —
-    its own sketch_state, bucket/vec ledgers, and lineage (operator
-    namespacing rule, code-review r04)."""
-    base = os.path.join(checkpoint_dir, "emb")
-    return (
-        os.path.join(base, "sketch_state"),
-        os.path.join(base, "bucket_ledger"),
-        os.path.join(base, "vec_ledger"),
-        os.path.join(base, "lineage"),
-    )
-
-
-def _emb_completed(spark, checkpoint_dir: str) -> list[dict]:
-    return _completed_metas(spark, _emb_paths(checkpoint_dir)[3])
-
-
-def _load_emb_state(spark, checkpoint_dir: str, exclude_epoch=None,
-                    with_raw: bool = False):
-    done = _done_shards(_emb_completed(spark, checkpoint_dir), exclude_epoch)
-    return _load_sketch_state(
-        spark, _emb_paths(checkpoint_dir)[0], done, EMB_SPEC, with_raw=with_raw
-    )
+_EMB = _Checkpoint("emb", EMB_SPEC,
+                   {"bucket_ledger": EMB_BUCKET_LEDGER_DDL, "vec_ledger": EMB_VEC_LEDGER_DDL})
 
 
 def compact_emb_checkpoint(spark, checkpoint_dir: str):
-    """Fold completed embedding shards' sketch rows into one shard=-1
-    row (same protocol as compact_dedup_checkpoint)."""
-    state_path = _emb_paths(checkpoint_dir)[0]
-    return _compact_sketch_state(
-        spark, state_path, _load_emb_state(spark, checkpoint_dir), EMB_SPEC
-    )
+    """Embedding analogue of compact_dedup_checkpoint."""
+    return _EMB.compact(checkpoint_dir)
 
 
 def _emb_planes(dim: int, bits: int, tables: int, seed_base: int = 101):
@@ -1711,12 +1419,12 @@ def _emb_table_keys(
     return src.mapInArrow(assign, schema=f"{id_col} {id_t}, bkey long")
 
 
-def _emb_check_geometry(spark, checkpoint_dir: str, bits: int, tables: int, dim: int):
+def _emb_check_geometry(checkpoint_dir: str, bits: int, tables: int, dim: int):
     """Bucket-key geometry must match the checkpoint's: keys computed
     with different bits/tables/dim never collide with retained keys,
-    so every probe would silently miss (code-review r05 third pass
-    #2). The geometry is recorded in each shard's lineage meta."""
-    prior = [m for m in _emb_completed(spark, checkpoint_dir) if "bits" in m]
+    so every probe would silently miss. The geometry is recorded in
+    each shard's lineage meta."""
+    prior = [m for m in _EMB.completed(checkpoint_dir) if "bits" in m]
     if prior:
         g = prior[-1]
         if (int(g["bits"]), int(g["tables"]), int(g["dim"])) != (bits, tables, dim):
@@ -1745,40 +1453,10 @@ def _emb_hist_matches(
     sketch probe over bucket keys, bucket-ledger candidate fetch, exact
     cosine verify against the vec ledger. Exposed (via
     emb_annotate_plan) so plan tools can explain the REAL operator."""
-    from ..queries import _with_window, seen_within_payloads, sk_window
-
-    empty = spark.createDataFrame(
-        [], "vec_id string, hist_vec_id string, cosine double"
-    )
-    sk, raw = _load_emb_state(
-        spark, checkpoint_dir, exclude_epoch=exclude_epoch, with_raw=True
-    )
-    if sk is None:
-        return empty
-    w = window if window is not None else sk_window(sk)
-    if w > sk_window(sk):
-        raise ValueError(
-            f"window {w} exceeds the sketch's window_ticks {sk_window(sk)}"
-        )
-    if w != sk_window(sk):
-        sk = _with_window(sk, w)
-        raw = None  # re-windowed: stored payload no longer matches
-    hits = (
-        seen_within_payloads(
-            spark, [("", raw if raw is not None else sk.to_bytes())],
-            keyed.select(F.col("bkey").alias("key")),
-            now, only_seen=True,
-        )
-        .select(F.col("key").alias("bkey"))
-        .distinct()
-    )
-    _, bucket_path, vec_path, _ = _emb_paths(checkpoint_dir)
-    done = _done_shards(_emb_completed(spark, checkpoint_dir), exclude_epoch)
-    bucket_led = _read_swap(spark, bucket_path, EMB_BUCKET_LEDGER_DDL)
-    vec_led = _read_swap(spark, vec_path, EMB_VEC_LEDGER_DDL)
-    assert bucket_led is not None and vec_led is not None, (
-        "completed emb shard without its ledgers"
-    )
+    probed = _EMB.probe(spark, checkpoint_dir, keyed, now, window, exclude_epoch)
+    if probed is None:
+        return spark.createDataFrame([], "vec_id string, hist_vec_id string, cosine double")
+    hits, live, led = probed
     # exact-cosine verify, round-6 shape (guide §8: decide with small
     # rows, move heavy bytes once; §4.2: vectorized native code inside
     # the kernel). The round-5 plan fetched candidates via a
@@ -1804,11 +1482,7 @@ def _emb_hist_matches(
     # The whole verify is one pure map over the shard — zero joins,
     # zero pair-stream shuffles, vectors crossing Arrow once.
     led_hits = (
-        bucket_led.where(
-            (F.col("shard").isin(done))
-            & (F.col("tick") >= F.lit(now - w + 1))
-            & (F.col("tick") <= F.lit(now))
-        )
+        led["bucket_ledger"].where(live)
         .select("bkey", F.col("vec_id").alias("hist_vec_id"))
         .join(F.broadcast(hits), "bkey")
         .toArrow()
@@ -1826,7 +1500,7 @@ def _emb_hist_matches(
         schema="vec_id string",  # explicit: inference fails on empty
     )
     hvec_rows = (
-        vec_led.where(F.col("shard").isin(done))
+        led["vec_ledger"]
         .join(F.broadcast(hist_ids_df), "vec_id", "left_semi")
         .select("vec_id", "embedding")
         .toArrow()
@@ -2005,7 +1679,7 @@ def emb_annotate_plan(
     .explain() the real operator. Callers who want the flags should
     use incremental_embedding_dedup(update_state=False): this raw plan
     re-reads the checkpoint on every action."""
-    _emb_check_geometry(spark, checkpoint_dir, bits, tables, dim)
+    _emb_check_geometry(checkpoint_dir, bits, tables, dim)
     src = new_df.select(
         F.col(id_col).cast("string").alias("vec_id"),
         F.col(vec_col).alias("embedding"),
@@ -2077,11 +1751,7 @@ def incremental_embedding_dedup(
     vectors are fixed. Intra-shard duplicates are out of scope — run
     embedding_near_dup on the shard first (same composition rule as
     incremental_passages)."""
-    from ..params import TimingParams
-
-    if params is None:
-        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    _emb_check_geometry(spark, checkpoint_dir, bits, tables, dim)
+    _emb_check_geometry(checkpoint_dir, bits, tables, dim)
 
     src = new_df.select(
         F.col(id_col).cast("string").alias("vec_id"),
@@ -2116,75 +1786,18 @@ def incremental_embedding_dedup(
             F.count("*").alias("n"),
             F.sum(F.col("is_emb_dup_history").cast("long")).alias("h"),
         ).collect()[0]
+        n, h = int(counts["n"]), int(counts["h"] or 0)
         keep = ann.where(~F.col("is_emb_dup_history")).select("vec_id")
-        _commit_emb_rows(
-            spark, src.join(F.broadcast(keep), "vec_id"),
-            keyed.join(F.broadcast(keep), "vec_id"),
-            checkpoint_dir, now,
-            dict(bits=bits, tables=tables, dim=dim, kind_="emb_dup",
-                 n_vecs=int(counts["n"]),
-                 n_emb_dup_history=int(counts["h"] or 0),
-                 n_retained=int(counts["n"]) - int(counts["h"] or 0),
-                 **(meta_extra or {})),
-            params=params, partitions=partitions,
-            pre_lineage=lambda: pre_lineage_hook(ann) if pre_lineage_hook else None,
+        tick = F.lit(now).alias("tick")
+        _EMB.commit(
+            spark, checkpoint_dir, now, params, partitions,
+            [keyed.join(F.broadcast(keep), "vec_id").select("bkey", "vec_id", tick),
+             src.join(F.broadcast(keep), "vec_id").select("vec_id", "embedding", tick)],
+            {"kind": "emb_dup", "bits": bits, "tables": tables, "dim": dim, "n_vecs": n,
+             "n_emb_dup_history": h, "n_retained": n - h, **(meta_extra or {})},
+            hook=pre_lineage_hook and (lambda: pre_lineage_hook(ann)),
         )
     return ann
-
-
-def _commit_emb_rows(
-    spark, vec_rows, key_rows, checkpoint_dir, now, meta_fields,
-    params, partitions, pre_lineage=None,
-):
-    """Append (vec_id, embedding) rows + their bucket keys to the emb
-    history state — sketch first, ledgers, caller-durable output,
-    lineage LAST (the family write order). No probing: commit is
-    independent of annotation, which is what lets the guard flag the
-    FULL batch but retain only the PUBLISHED survivors (code-review
-    r05 fifth pass #1 — the passages survivor-keeper rule applied to
-    the semantic half)."""
-    from ..params import ScalingParams
-    from ..pipeline import SketchSpec, build_sketches
-
-    kind = "stbf" if isinstance(params, ScalingParams) else "tbf"
-    state_path, bucket_path, vec_path, lineage_path = _emb_paths(checkpoint_dir)
-    shard = len(_emb_completed(spark, checkpoint_dir))
-    shaped = key_rows.select(
-        F.col("vec_id").alias("doc_id"),
-        F.array("bkey").alias("tokens"),
-        F.lit(1).alias("n_tok"),
-        F.lit(now).cast("long").alias("tick"),
-    )
-    spec = SketchSpec(EMB_SPEC, kind, params, value="tokens")
-    built = build_sketches(
-        shaped, [spec], group_cols=(), tick_col=F.col("tick"),
-        partitions=partitions,
-    ).where(F.col("spec") == EMB_SPEC)
-    _heal_swap(state_path)
-    _heal_swap(bucket_path)
-    _heal_swap(vec_path)
-    built.withColumn("shard", F.lit(shard)).selectExpr(
-        "spec", "group", "payload", "n_items", "cast(shard as int) shard"
-    ).write.mode("append").parquet(state_path)
-    key_rows.select(
-        "bkey", "vec_id", F.lit(now).cast("long").alias("tick"),
-        F.lit(shard).cast("int").alias("shard"),
-    ).write.mode("append").parquet(bucket_path)
-    # cast to the ledger DDL's array<float> at ingest (ADVICE r05 #2):
-    # an uncast array<double> caller would commit fine on shard 1 and
-    # then poison every later probe with a parquet schema-conversion
-    # error when _read_swap applies EMB_VEC_LEDGER_DDL
-    vec_rows.select(
-        "vec_id",
-        F.col("embedding").cast("array<float>").alias("embedding"),
-        F.lit(now).cast("long").alias("tick"),
-        F.lit(shard).cast("int").alias("shard"),
-    ).write.mode("append").parquet(vec_path)
-    if pre_lineage is not None:
-        pre_lineage()
-    kind_ = meta_fields.pop("kind_", "emb_dup")
-    meta = {"shard": shard, "now": int(now), "kind": kind_, **meta_fields}
-    append_rows(lineage_path, [(shard, json.dumps(meta, sort_keys=True))], LINEAGE_SCHEMA)
 
 
 def commit_emb_state(
@@ -2208,18 +1821,7 @@ def commit_emb_state(
     embeddings mode does this; committing unpublished vectors would
     let them suppress future docs with no published keeper). Geometry
     must match the checkpoint's (validated, like the probe path)."""
-    from ..params import TimingParams
-
-    if params is None:
-        params = TimingParams(capacity=2_000_000, error=0.001, window_ticks=2**31)
-    prior = [m for m in _emb_completed(spark, checkpoint_dir) if "bits" in m]
-    if prior:
-        g = prior[-1]
-        if (int(g["bits"]), int(g["tables"]), int(g["dim"])) != (bits, tables, dim):
-            raise ValueError(
-                f"emb checkpoint geometry bits={g['bits']} tables={g['tables']} "
-                f"dim={g['dim']} != bits={bits} tables={tables} dim={dim}"
-            )
+    _emb_check_geometry(checkpoint_dir, bits, tables, dim)
     src = new_df.select(
         F.col(id_col).cast("string").alias("vec_id"),
         F.col(vec_col).alias("embedding"),
@@ -2229,10 +1831,10 @@ def commit_emb_state(
         vec_col="embedding", id_col="vec_id",
     ).localCheckpoint(eager=True)
     n = src.count()
-    _commit_emb_rows(
-        spark, src, keyed, checkpoint_dir, now,
-        dict(bits=bits, tables=tables, dim=dim, kind_="emb_dup",
-             n_vecs=int(n), n_emb_dup_history=0, n_retained=int(n),
-             **(meta_extra or {})),
-        params=params, partitions=partitions,
+    tick = F.lit(now).alias("tick")
+    _EMB.commit(
+        spark, checkpoint_dir, now, params, partitions,
+        [keyed.select("bkey", "vec_id", tick), src.select("vec_id", "embedding", tick)],
+        {"kind": "emb_dup", "bits": bits, "tables": tables, "dim": dim, "n_vecs": n,
+         "n_emb_dup_history": 0, "n_retained": n, **(meta_extra or {})},
     )

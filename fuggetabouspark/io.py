@@ -12,6 +12,7 @@ mismatches fail loudly with the offending field named.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
@@ -108,8 +109,7 @@ def read_table(path: str, schema: pa.Schema, columns=None) -> pa.Table:
     and append_rows files alike."""
     import pyarrow.dataset as ds
 
-    if not os.path.exists(path) and os.path.exists(path + "_old"):
-        path = path + "_old"
+    path = live_dir(path)
     if not os.path.exists(path):
         return schema.empty_table().select(columns or schema.names)
     return ds.dataset(path, schema=schema, format="parquet").to_table(columns=columns)
@@ -130,3 +130,38 @@ def append_rows(path: str, rows: list[tuple], schema: pa.Schema) -> None:
     tmp = os.path.join(path, "." + name)
     pq.write_table(table, tmp)
     os.replace(tmp, os.path.join(path, name))
+
+
+def live_dir(path: str) -> str:
+    """``path``, or ``path_old`` when a swap_dir crashed between its
+    renames and left only the aside copy."""
+    if not os.path.exists(path) and os.path.exists(path + "_old"):
+        return path + "_old"
+    return path
+
+
+def swap_dir(write_fn, path: str) -> None:
+    """Replace the directory ``path`` with what ``write_fn(tmp)``
+    writes. The old directory is renamed aside before the new one is
+    moved in, so every crash point leaves the old directory, the
+    ``_old`` copy (live_dir) or the new directory readable. A leftover
+    ``_compacting`` directory of a crashed swap is replaced, and
+    ``_old`` is only retired once ``path`` exists again."""
+    tmp, old = path + "_compacting", path + "_old"
+    shutil.rmtree(tmp, ignore_errors=True)
+    write_fn(tmp)
+    if os.path.exists(path):
+        shutil.rmtree(old, ignore_errors=True)
+        shutil.move(path, old)
+    shutil.move(tmp, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def heal_swap(path: str) -> None:
+    """Finish a swap_dir that crashed between its renames: restore the
+    ``_old`` copy as ``path``. Every writer that APPENDS to a swapped
+    directory calls this first; an append would otherwise create a new
+    ``path`` holding only the new rows, which readers then prefer over
+    the whole history in ``_old``. Readers never heal."""
+    if live_dir(path) != path:
+        os.rename(path + "_old", path)

@@ -27,9 +27,8 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
-from .io import LINEAGE_SCHEMA, SHARD_SCHEMA, append_rows, read_table
+from .io import LINEAGE_SCHEMA, SHARD_SCHEMA, append_rows, heal_swap, read_table, swap_dir
 from .pipeline import (GROUP_SEP, LINEAGE_SPEC, SketchSpec, build_sketches, corpus_digest,
                        lineage_from_rows, merge_rows_to_sketches)
 
@@ -83,6 +82,7 @@ def build_resumable(
     state_path, lineage_path = _paths(checkpoint_dir)
     done = completed_shards(spark, checkpoint_dir, expect_n_shards=n_shards)
     shard_col = F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
+    heal_swap(state_path)
 
     built = 0
     for shard in range(n_shards):
@@ -156,20 +156,7 @@ def compact_checkpoint(spark, checkpoint_dir: str, now: int, drop_groups_before:
         if hasattr(sk, "decay"):
             sk.decay(now)
         rows.append((spec, group, sk.to_bytes(), sk.n_items, -1))
-    tmp = state_path + "_compacting"
-    old = state_path + "_old"
-    shutil.rmtree(tmp, ignore_errors=True)  # leftover of a crashed compaction
-    append_rows(tmp, rows, SHARD_SCHEMA)
-    # re-entrant swap: only retire the _old fallback once a live
-    # state_path exists. If a previous compaction crashed between the
-    # two renames (state missing, _old = the only live copy — which
-    # load_state above just read), we must NOT delete _old before the
-    # new state is in place.
-    if os.path.exists(state_path):
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.move(state_path, old)  # crash here → load_state falls back to _old
-    shutil.move(tmp, state_path)
-    shutil.rmtree(old, ignore_errors=True)
+    swap_dir(lambda tmp: append_rows(tmp, rows, SHARD_SCHEMA), state_path)
     return load_state(spark, checkpoint_dir)
 
 

@@ -220,6 +220,42 @@ class TestStreamingIngestGuard:
         assert ledger_df(spark, ck).count() == 3
         assert spark.read.parquet(clean).where("_epoch = 2").count() == 0
 
+    def test_checkpoint_layout_with_every_operator(self, spark, ck, tmp_path):
+        """The on-disk layout existing checkpoints rely on: each
+        operator's sketch_state, ledgers and lineage in its own
+        subdirectory, unchanged by compaction and expiry."""
+        import os
+
+        from fuggetabouspark.dataops import StreamingIngestGuard, expire_ledgers
+
+        p = TimingParams(capacity=10_000, error=0.001, window_ticks=2**31)
+        g = StreamingIngestGuard(
+            spark, ck, clean_dir=str(tmp_path / "clean"), params=p,
+            near=True, near_params=p, passages=True, passage_window=5, passage_params=p,
+            embeddings=True, emb_dim=4, emb_params=p, compact_every=1, expire_every=1,
+        )
+        g.process_batch(spark.createDataFrame(
+            [(i, " ".join(f"d{i}w{j}" for j in range(20)), [float(i), 1.0, -1.0, 0.5])
+             for i in (1, 2)],
+            "doc_id long, text string, embedding array<float>",
+        ), 0)
+        state = {"sketch_state", "lineage"}
+        want = (state | {"fp_ledger", "near", "passages", "emb"}
+                | {f"near/{d}" for d in state | {"band_ledger", "sig_ledger"}}
+                | {f"passages/{d}" for d in state | {"fp_ledger"}}
+                | {f"emb/{d}" for d in state | {"bucket_ledger", "vec_ledger"}})
+
+        def dirs():
+            return {os.path.relpath(os.path.join(root, d), ck)
+                    for root, names, _ in os.walk(ck) for d in names}
+
+        assert dirs() == want
+        assert set(expire_ledgers(spark, ck, now=1)) == {
+            "fp_ledger", "band_ledger", "sig_ledger", "passage_ledger",
+            "bucket_ledger", "vec_ledger",
+        }
+        assert dirs() == want
+
     def test_real_stream_available_now(self, spark, ck, tmp_path):
         import os
 
@@ -396,19 +432,19 @@ class TestRound5StateBounding:
             compact_near_checkpoint,
             incremental_near_dup,
         )
-        from fuggetabouspark.dataops.incremental import _load_near_state
+        from fuggetabouspark.dataops.incremental import _NEAR
 
         texts = [" ".join(f"t{j}v{i}" for j in range(40)) for i in range(3)]
         for i, t in enumerate(texts):
             incremental_near_dup(
                 spark, self._mk(spark, i, t), ck, now=i + 1, params=self.P
             ).unpersist()
-        before = _load_near_state(spark, ck)
+        before = _NEAR.load(ck)
         sk = compact_near_checkpoint(spark, ck)
         assert sk is not None
         rows = spark.read.parquet(os.path.join(ck, "near", "sketch_state")).collect()
         assert [r.shard for r in rows] == [-1]
-        after = _load_near_state(spark, ck)
+        after = _NEAR.load(ck)
         assert after.to_bytes() == before.to_bytes()
         # post-compaction ingest still near-dedups against ALL prior
         # shards: an exact clone of texts[1] matches with certainty
@@ -420,7 +456,7 @@ class TestRound5StateBounding:
         q.unpersist()
         # idempotent
         compact_near_checkpoint(spark, ck)
-        assert _load_near_state(spark, ck) is not None
+        assert _NEAR.load(ck) is not None
 
     def test_expire_ledgers_bounds_state(self, spark, ck):
         from fuggetabouspark.dataops import (
@@ -502,7 +538,7 @@ class TestRound5StateBounding:
             StreamingIngestGuard,
             incremental_near_dup,
         )
-        from fuggetabouspark.dataops.incremental import _near_completed
+        from fuggetabouspark.dataops.incremental import _NEAR
 
         clean = os.path.join(ck, "clean")
         g = StreamingIngestGuard(
@@ -531,7 +567,7 @@ class TestRound5StateBounding:
         # both attempts' shards are in the near lineage for epoch 1 —
         # duplicate state rows are merge-all-safe and bounded by
         # compaction/expiry
-        epochs = [m.get("epoch") for m in _near_completed(spark, ck)]
+        epochs = [m.get("epoch") for m in _NEAR.completed(ck)]
         assert epochs.count(1) == 2
 
     def test_many_shard_state_stays_bounded(self, spark, ck):
@@ -980,6 +1016,17 @@ class TestIncrementalEmbeddingDedup:
                 update_state=False,
             )
 
+    def test_commit_emb_state_rejects_other_geometry(self, spark, ck):
+        import numpy as np
+
+        from fuggetabouspark.dataops import commit_emb_state
+
+        v = [float(x) for x in np.random.default_rng(5).normal(size=self.DIM)]
+        a = self._vecs(spark, [(1, v)])
+        commit_emb_state(spark, a, ck, now=1, dim=self.DIM, params=self.P)
+        with pytest.raises(ValueError, match="bits"):
+            commit_emb_state(spark, a, ck, now=2, dim=self.DIM, bits=8, params=self.P)
+
     def test_guard_embeddings_mode(self, spark, ck):
         """Guard embeddings=True: a doc whose TEXT is novel but whose
         VECTOR exactly re-uploads retained history is dropped from the
@@ -1042,3 +1089,85 @@ class TestIncrementalEmbeddingDedup:
         # doc 4: v2 again — NOW suppressed by doc 3's published copy
         g.process_batch(spark.createDataFrame([(4, "text four", v2)], ddl), 3)
         assert spark.read.parquet(clean).where("_epoch = 3").count() == 0
+
+
+class TestSharedCommit:
+    """The commit every history-appending operator shares: a crash just
+    before the lineage row leaves orphan sketch and ledger rows that
+    the loaders ignore, and the retried shard flags exactly as an
+    uninterrupted run does."""
+
+    P = TimingParams(capacity=10_000, error=0.001, window_ticks=2**31)
+
+    def _op(self, spark, kind, ck, rows, now):
+        from fuggetabouspark.dataops import (
+            incremental_embedding_dedup,
+            incremental_near_dup,
+            incremental_passages,
+        )
+
+        if kind == "embeddings":
+            df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+            return incremental_embedding_dedup(spark, df, ck, now=now, dim=8, params=self.P)
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        if kind == "near":
+            return incremental_near_dup(spark, df, ck, now=now, params=self.P)
+        return incremental_passages(spark, df, ck, now=now, window=5, params=self.P)
+
+    @staticmethod
+    def _batches(kind):
+        """Shard A, then shard B = a clone of A's first item + a novel one."""
+        if kind == "embeddings":
+            import numpy as np
+
+            v = np.random.default_rng(17).normal(size=(3, 8))
+            item = {i: [float(x) for x in v[i]] for i in range(3)}
+        else:
+            item = {i: " ".join(f"d{i}w{j}" for j in range(40)) for i in range(3)}
+        return [(1, item[0]), (2, item[1])], [(3, item[0]), (4, item[2])]
+
+    @staticmethod
+    def _flags(ann):
+        out = sorted(tuple(r) for r in ann.collect())
+        ann.unpersist()
+        return out
+
+    @pytest.mark.parametrize("kind", ["near", "passages", "embeddings"])
+    def test_crash_before_lineage_leaves_invisible_orphans(
+        self, spark, ck, tmp_path, kind, monkeypatch
+    ):
+        import fuggetabouspark.dataops.incremental as inc
+        from fuggetabouspark.io import SHARD_SCHEMA, read_table
+
+        cp = {"near": inc._NEAR, "passages": inc._PASSAGES, "embeddings": inc._EMB}[kind]
+        a, b = self._batches(kind)
+        self._flags(self._op(spark, kind, ck, a, 1))
+        sketch = cp.load(ck).to_bytes()
+        rows = {name: cp.ledger(spark, ck, name).count() for name in cp.ledgers}
+
+        append = inc.append_rows
+
+        def crash_before_lineage(path, data, schema):
+            if path == cp.path(ck, "lineage"):
+                raise RuntimeError("crash before lineage")
+            append(path, data, schema)
+
+        monkeypatch.setattr(inc, "append_rows", crash_before_lineage)
+        with pytest.raises(RuntimeError, match="crash before lineage"):
+            self._op(spark, kind, ck, b, 2)
+        monkeypatch.undo()
+
+        assert len(cp.completed(ck)) == 1
+        shards = read_table(cp.path(ck, "sketch_state"), SHARD_SCHEMA).column("shard")
+        assert 1 in shards.to_pylist()
+        assert cp.load(ck).to_bytes() == sketch
+        done = cp.done(ck)
+        for name, n in rows.items():
+            assert cp.ledger(spark, ck, name).count() > n
+            assert cp.ledger(spark, ck, name, done).count() == n
+
+        retried = self._flags(self._op(spark, kind, ck, b, 2))
+        ck2 = str(tmp_path / "uninterrupted")
+        self._flags(self._op(spark, kind, ck2, a, 1))
+        assert retried == self._flags(self._op(spark, kind, ck2, b, 2))
+        assert len(cp.completed(ck)) == 2

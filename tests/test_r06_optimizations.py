@@ -160,19 +160,15 @@ class TestEmbVerifyMissingPartner:
         ).unpersist()
         # empty the vec ledger (keep schema) — simulates a partner
         # whose vector row is gone while its bucket keys remain
-        from fuggetabouspark.dataops.incremental import (
-            EMB_VEC_LEDGER_DDL,
-            _emb_paths,
-            _read_swap,
-            _swap_dir,
-        )
+        from fuggetabouspark.dataops.incremental import EMB_VEC_LEDGER_DDL, _EMB
+        from fuggetabouspark.io import swap_dir
 
-        vec_path = _emb_paths(ck)[2]
+        vec_path = _EMB.path(ck, "vec_ledger")
         empty = spark.createDataFrame([], EMB_VEC_LEDGER_DDL)
-        _swap_dir(
+        swap_dir(
             lambda tmp: empty.write.mode("overwrite").parquet(tmp), vec_path
         )
-        assert _read_swap(spark, vec_path, EMB_VEC_LEDGER_DDL).count() == 0
+        assert _EMB.ledger(spark, ck, "vec_ledger").count() == 0
         day2 = spark.createDataFrame(vecs, "vec_id string, embedding array<float>")
         ann = incremental_embedding_dedup(
             spark, day2, ck, now=2, dim=dim, bits=6, params=p,

@@ -585,6 +585,18 @@ class TestCheckpointCommit:
         shards = ds.dataset(str(ck / "sketch_state")).to_table().column("shard").to_pylist()
         assert shards == [-1] * len(full_build[1])
 
+    def test_resume_heals_crashed_compaction_swap(self, spark, tmp_path, full_build):
+        """A compaction that crashed between its renames left only
+        sketch_state_old; the resumed build restores it before its
+        first append instead of shadowing the earlier shards."""
+        import shutil
+
+        ck = tmp_path / "ck"
+        with pytest.raises(RuntimeError, match="injected failure"):
+            _resume(spark, str(ck), fail_after_shard=1)
+        shutil.move(ck / "sketch_state", ck / "sketch_state_old")
+        _assert_same_state(_resume(spark, str(ck)), full_build[1])
+
     def test_spark_reads_new_files_with_ddl_schema(self, spark, full_build):
         from fuggetabouspark.state import SHARD_DDL
 

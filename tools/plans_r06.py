@@ -119,18 +119,12 @@ def main():
         spark, day1, ckdir, now=1, text_col="tokens", partitions=8, params=ip
     ).unpersist()
     day2 = day1.withColumn("doc_id", F.concat("doc_id", F.lit("_r")))
-    if hasattr(inc, "_shard_fps"):
-        # round-6 operator shape: incremental_dedup materializes the
-        # (doc_id, fp, tick) frame once and hands it to the annotate
-        # plan — capture exactly what the operator executes
-        fps = inc._shard_fps(day2, "tokens", None, 2).localCheckpoint(eager=True)
-        sections["incremental_recrawl"] = inc.annotate_against_history(
-            spark, day2, ckdir, 2, text_col="tokens", fps_df=fps
-        )
-    else:
-        sections["incremental_recrawl"] = inc.annotate_against_history(
-            spark, day2, ckdir, 2, text_col="tokens"
-        )
+    # incremental_dedup materializes the (doc_id, fp, tick) frame once
+    # and hands it to the annotate plan — capture exactly what it runs
+    fps = inc._shard_fps(day2, "tokens", None, 2).localCheckpoint(eager=True)
+    sections["incremental_recrawl"] = inc.annotate_against_history(
+        spark, day2, ckdir, 2, text_col="tokens", fps_df=fps
+    )
 
     # --- incremental emb probe (needs a day-1 emb checkpoint) ---
     EDIM = 16
@@ -155,94 +149,11 @@ def main():
     day2v = spark.range(2000, 4000).select(
         F.col("id").alias("vec_id"), vec_of(F.col("id") - 2000).alias("embedding")
     )
-    # the LAZY probe plan: replicate incremental_embedding_dedup's
-    # update_state=False path but capture the annotated frame BEFORE
-    # its localCheckpoint (a checkpointed frame's plan is just a scan)
-    if hasattr(inc, "emb_annotate_plan"):
-        sections["incremental_emb"] = inc.emb_annotate_plan(
-            spark, day2v, eck, now=2, dim=EDIM, bits=12
-        )
-    else:
-        # round-start code (before tag): the probe plan was inline in
-        # incremental_embedding_dedup; reconstruct the SAME lazy frame
-        # the operator materialized (verbatim from the r5 source) so
-        # the before-plan is the real round-5 shape
-        from fuggetabouspark.dataops.similarity import _dot, _norm
-        from fuggetabouspark.queries import seen_within_distributed, sk_window
-
-        src = day2v.select(
-            F.col("vec_id").cast("string").alias("vec_id"),
-            F.col("embedding").alias("embedding"),
-        )
-        keyed = inc._emb_table_keys(
-            src, dim=EDIM, bits=12, tables=8,
-            vec_col="embedding", id_col="vec_id",
-        ).localCheckpoint(eager=True)
-        sk = inc._load_emb_state(spark, eck)
-        w = sk_window(sk)
-        state_df = spark.createDataFrame(
-            [(inc.EMB_SPEC, "", bytearray(sk.to_bytes()), int(sk.n_items))],
-            "spec string, group string, payload binary, n_items long",
-        )
-        hits = (
-            seen_within_distributed(
-                spark, state_df, inc.EMB_SPEC,
-                keyed.select(F.col("bkey").alias("key")).distinct(),
-                2, only_seen=True,
-            )
-            .select(F.col("key").alias("bkey"))
-            .distinct()
-        )
-        done = inc._done_shards(inc._emb_completed(spark, eck), None)
-        bucket_led = inc._read_swap(
-            spark, inc._emb_paths(eck)[1], inc.EMB_BUCKET_LEDGER_DDL
-        )
-        vec_led = inc._read_swap(
-            spark, inc._emb_paths(eck)[2], inc.EMB_VEC_LEDGER_DDL
-        )
-        probe = keyed.select("bkey", "vec_id").join(F.broadcast(hits), "bkey")
-        cand = (
-            bucket_led.where(
-                (F.col("shard").isin(done))
-                & (F.col("tick") >= F.lit(2 - w + 1)) & (F.col("tick") <= F.lit(2))
-            )
-            .select("bkey", F.col("vec_id").alias("hist_vec_id"))
-            .join(F.broadcast(probe), "bkey")
-            .select("vec_id", "hist_vec_id")
-            .distinct()
-        )
-        hist_ids = cand.select(F.col("hist_vec_id").alias("vec_id")).distinct()
-        hvecs = (
-            vec_led.where(F.col("shard").isin(done))
-            .join(F.broadcast(hist_ids), "vec_id", "left_semi")
-            .select(F.col("vec_id").alias("hist_vec_id"), F.col("embedding").alias("hvec"))
-        )
-        nprod = _norm(F.col("embedding")) * _norm(F.col("hvec"))
-        cos = F.when(nprod > 0, _dot(F.col("embedding"), F.col("hvec")) / nprod).otherwise(F.lit(-1.0))
-        hist_matches = (
-            src.join(F.broadcast(cand), "vec_id")
-            .join(F.broadcast(hvecs), "hist_vec_id")
-            .select("vec_id", "hist_vec_id", cos.alias("cosine"))
-            .where(F.col("cosine") >= 0.9)
-            .groupBy("vec_id")
-            .agg(F.max(F.struct("cosine", "hist_vec_id")).alias("_best"))
-        )
-        sections["incremental_emb"] = (
-            src.select("vec_id")
-            .join(
-                hist_matches.select(
-                    "vec_id",
-                    F.col("_best.hist_vec_id").alias("hist_vec_id"),
-                    F.col("_best.cosine").alias("cosine"),
-                ),
-                "vec_id", "left",
-            )
-            .select(
-                "vec_id",
-                F.col("hist_vec_id").isNotNull().alias("is_emb_dup_history"),
-                "hist_vec_id", "cosine",
-            )
-        )
+    # the LAZY probe plan incremental_embedding_dedup materializes (a
+    # checkpointed frame's plan is just a scan)
+    sections["incremental_emb"] = inc.emb_annotate_plan(
+        spark, day2v, eck, now=2, dim=EDIM, bits=12
+    )
 
     for name, df in sections.items():
         if only and name not in only:
